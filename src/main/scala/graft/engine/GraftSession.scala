@@ -4,51 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 
 /** Session factory for the graft engine.
   *
-  * Mirrors the reference's server bootstrap (MyScaleDB registers search
-  * functions + storage at startup; see
-  * `/root/reference/src/Functions/registerFunctions.cpp:9-15`): here we
-  * install our Catalyst extensions and register SQL-visible functions on
-  * an existing or new SparkSession.
+  * The function surface and the Catalyst rules arrive with
+  * [[GraftExtensions]] (the reference registers its functions once, at
+  * server start: `/root/reference/src/Functions/registerFunctions.cpp:9-15`);
+  * the one session-scoped step left is attaching the query log.
   */
 object GraftSession {
 
-  /** Extensions installer — usable via
-    * `.config("spark.sql.extensions", "graft.engine.GraftExtensions")`.
-    */
-  def builder(cores: Int = 32): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // 100 TB posture: AQE coalesces/splits post-shuffle partitions and
-      // rewrites skewed joins at runtime; scan splits sized so a task's
-      // working set fits executor memory comfortably.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // r21: shuffled-hash joins where their (byte-sized) conditions
-      // hold — static preference off sort-merge plus AQE's runtime
-      // SMJ→SHJ conversion for small build maps; scale-adaptive by
-      // construction (see Bench.scala for the measured A/B).
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
-      // r21: byte-sized post-shuffle coalescing (see Bench.scala A/B);
-      // partition counts derive from data volume, not a parallelism
-      // constant — the guide §2.2 posture at every scale
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.files.maxPartitionBytes", "256m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-
   /** The engine's session-conf posture (guide §2.2/§3.1) with the r21
-    * env knobs — ONE source of truth so Bench (timed runs), Verify (the
-    * driver's oracle gate), QueryTime (A/B tool) and PlanSnap (plan
-    * evidence) all execute the SAME physical plans. r21 shipped these
-    * only in Bench, so the 252/252 gate validated stock-conf plans
-    * while Bench timed conf'd ones (VERDICT r21 #3).
+    * env knobs — one source of truth, applied by [[create]], so Bench
+    * (timed runs), Verify (the oracle gate), the tools and the specs all
+    * execute the SAME physical plans.
     */
   def engineConfs: Seq[(String, String)] = Seq(
     "spark.sql.adaptive.enabled" -> "true",
@@ -71,27 +37,46 @@ object GraftSession {
   def withEngineConfs(b: SparkSession.Builder): SparkSession.Builder =
     engineConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
-  /** Register everything onto a session created elsewhere (e.g. the
-    * driver's Verify/Bench sessions, which we don't construct).
+  /** Local cores: `SPARK_GRAFT_CPUS`, else every available processor. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session factory: a local session on `cpus` cores with
+    * [[engineConfs]], UTC, no UI, and nanosecond parquet timestamps read
+    * as longs (see [[Tables.events]]).
+    */
+  def create(cpus: Int = defaultCpus): SparkSession = {
+    val spark = withEngineConfs(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .withExtensions(new GraftExtensions))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    install(spark)
+  }
+
+  /** Attach the session-scoped query log to a session built elsewhere
+    * with [[GraftExtensions]]; [[create]] does this itself.
     */
   def install(spark: SparkSession): SparkSession = {
-    graft.functions.GraftFunctions.registerAll(spark)
-    graft.functions.ClickHouseCompat.install(spark)
-    graft.multimodal.Connections.installNative(spark) // SQL getObject()
-    graft.operators.Dictionaries.install(spark) // dictGet<T> name surface
-    graft.operators.JoinSetStorage.install(spark) // joinGet / inSet surface
     QueryLog.install(spark) // system.query_log analog
     spark
   }
 }
 
-/** SparkSessionExtensions entry point: injects the top-K search rewrite
+/** SparkSessionExtensions entry point: injects the whole function surface
+  * ([[graft.functions.FunctionSurface]]) and the top-K search rewrite
   * (reference: `ORDER BY distance(...) LIMIT k` is recognized and turned
   * into an index/brute top-K scan, `/root/reference/src/Interpreters/
   * ExpressionAnalyzer.cpp:216-240`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    graft.functions.FunctionSurface.entries.foreach(ext.injectFunction)
     ext.injectOptimizerRule(spark => graft.plans.TopKSearchRewrite(spark))
     ext.injectOptimizerRule(spark => graft.plans.ProjectionRewrite(spark))
   }

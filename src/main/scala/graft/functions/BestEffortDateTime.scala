@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.functions.udf
+
 /** Behavior port of the reference's best-effort datetime scanner
   * (`src/IO/parseDateTimeBestEffort.cpp`): digit-group driven — 13
   * digits = unix millis, 10/9 = unix seconds, 14 = YYYYMMDDhhmmss, 8 =
@@ -284,24 +286,24 @@ object BestEffortDateTime {
       case None => null
     }
 
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def register(r: FunctionSurface.Registrar): Unit = {
     // 32/64 forms share the scanner; DateTime64 keeps the fractional part
     for (base <- Seq("parseDateTimeBestEffort", "parseDateTime32BestEffort",
         "parseDateTime64BestEffort")) {
-      spark.udf.register(base, (s: String) => parseTs(s, usStyle = false))
-      spark.udf.register(s"${base}OrNull", (s: String) => parseTsOrNull(s, usStyle = false))
-      spark.udf.register(s"${base}OrZero", (s: String) => {
+      r.udf(base, udf((s: String) => parseTs(s, usStyle = false)))
+      r.udf(s"${base}OrNull", udf((s: String) => parseTsOrNull(s, usStyle = false)))
+      r.udf(s"${base}OrZero", udf((s: String) => {
         val r = parseTsOrNull(s, usStyle = false)
         if (r == null) new java.sql.Timestamp(0L) else r
-      })
+      }))
     }
     for (base <- Seq("parseDateTimeBestEffortUS", "parseDateTime64BestEffortUS")) {
-      spark.udf.register(base, (s: String) => parseTs(s, usStyle = true))
-      spark.udf.register(s"${base}OrNull", (s: String) => parseTsOrNull(s, usStyle = true))
-      spark.udf.register(s"${base}OrZero", (s: String) => {
+      r.udf(base, udf((s: String) => parseTs(s, usStyle = true)))
+      r.udf(s"${base}OrNull", udf((s: String) => parseTsOrNull(s, usStyle = true)))
+      r.udf(s"${base}OrZero", udf((s: String) => {
         val r = parseTsOrNull(s, usStyle = true)
         if (r == null) new java.sql.Timestamp(0L) else r
-      })
+      }))
     }
   }
 }

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.functions.udf
+
 /** Value-exact ports of the last two digest algorithms the reference
   * exposes that the JDK lacks: MD4 (RFC 1320; reference registers MD4 in
   * `FunctionsHashing.h` via OpenSSL) and BLAKE3 (the published BLAKE3
@@ -205,10 +207,10 @@ object Blake3Md4 {
     out
   }
 
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.udf.register("MD4", (s: String) =>
-      if (s == null) null else md4(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    spark.udf.register("BLAKE3", (s: String) =>
-      if (s == null) null else blake3(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+  def register(r: FunctionSurface.Registrar): Unit = {
+    r.udf("MD4", udf((s: String) =>
+      if (s == null) null else md4(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
+    r.udf("BLAKE3", udf((s: String) =>
+      if (s == null) null else blake3(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
   }
 }

@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.SparkSession
 
 /** Variadic, value-exact ClickHouse hash functions as a Catalyst
   * expression (`src/Functions/FunctionsHashing.h:113-166`):
@@ -24,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   *  - any NULL argument makes the result NULL (matches
   *    `00803_xxhash.sql`: `xxHash64(NULL) is NULL`).
   *
-  * Registered by [[HashParity.install]] directly in the session's
-  * FunctionRegistry so any arity resolves. NOTE: `xxHash64` shadows
+  * Registered by [[HashParity.register]] as a registry builder so any
+  * arity resolves. NOTE: `xxHash64` shadows
   * Spark's builtin `xxhash64` (names are case-insensitive) — the CH
   * semantics (per-argument XXH64 seed 0 + Hash128to64 combine) replace
   * Spark's seed-42 streaming hash in SQL; internal engine code that
@@ -179,11 +177,8 @@ object ChHash {
   }
 
   /** Register every variadic hash name into the session registry. */
-  def install(spark: SparkSession): Unit = specs.keys.foreach { name =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[ChHash].getName, name),
-      (children: Seq[Expression]) => ChHash(name, children))
+  def register(r: FunctionSurface.Registrar): Unit = specs.keys.foreach { name =>
+    r.expr(name)(children => ChHash(name, children))
   }
 }
 

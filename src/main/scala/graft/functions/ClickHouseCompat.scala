@@ -1,13 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.functions.udf
 
 /** ClickHouse-named scalar functions (SURVEY §2.9) expressed as Spark SQL
   * UDFs — which doubles as coverage of the reference's
   * `CREATE FUNCTION name AS (x) -> expr` SQL-lambda surface (§2.10,
   * `/root/reference/src/Functions/UserDefined/`): every alias below IS a
-  * SQL-defined function created through the same `CREATE FUNCTION ...
-  * RETURN expr` machinery a user would use.
+  * SQL-defined function, parsed by the same `CREATE FUNCTION ... RETURN
+  * expr` grammar a user would use and inlined by the same analyzer rule.
   *
   * Notes on deviations:
   *  - hash functions (cityHash64, sipHash64, the murmur family, ...)
@@ -69,8 +71,8 @@ object ClickHouseCompat {
     "notLike(s STRING, p STRING) RETURNS BOOLEAN RETURN NOT s LIKE p",
     "visibleWidth(s STRING) RETURNS INT RETURN length(s)")
 
-  /** All definitions. Temporary functions — session-scoped, like the
-    * reference's `CREATE TEMPORARY FUNCTION`.
+  /** All definitions, each `name(params) RETURNS type RETURN body` —
+    * the text of a `CREATE TEMPORARY FUNCTION` statement.
     */
   val definitions: Seq[String] = conversionGrid ++ Seq(
     // ---- date/time (reference src/Functions/DateTimeTransforms.h) ----
@@ -116,11 +118,11 @@ object ClickHouseCompat {
     "splitByChar(sep STRING, s STRING) RETURNS ARRAY<STRING> RETURN split(s, concat('\\\\Q', sep, '\\\\E'), -1)",
     "trimBoth(s STRING) RETURNS STRING RETURN trim(s)",
     "concatAssumeInjective(a STRING, b STRING) RETURNS STRING RETURN concat(a, b)",
-    // ---- hashes: value-exact natives live in HashParity.install ----
+    // ---- hashes: value-exact natives live in HashParity ----
     // ---- arrays (reference src/Functions/array/) ----
     // arraySum/Avg/Min/Max/Uniq/Sort/ReverseSort/CumSum(NonNegative),
     // mapKeys/mapContains: generic + lambda-capable native builders in
-    // HigherOrder.install (registered after this SQL pass, so they win).
+    // HigherOrder.
     "arrayStringConcat(a ARRAY<STRING>, sep STRING) RETURNS STRING RETURN array_join(a, sep)",
     "arrayCompactSorted(a ARRAY<STRING>) RETURNS ARRAY<STRING> RETURN array_sort(array_distinct(a))",
     "indexOf(a ARRAY<STRING>, x STRING) RETURNS BIGINT RETURN array_position(a, x)",
@@ -282,8 +284,6 @@ object ClickHouseCompat {
     "bar(x DOUBLE, mn DOUBLE, mx DOUBLE, w INT) RETURNS STRING RETURN " +
       "repeat('#', CAST(greatest(least((x - mn) / (mx - mn), 1D), 0D) * w AS INT))",
     // ---- tranche 4: math (src/Functions/FunctionMathUnary.h) ----
-    "intExp2(n INT) RETURNS BIGINT RETURN CAST(pow(2, n) AS BIGINT)",
-    "intExp10(n INT) RETURNS BIGINT RETURN CAST(pow(10, n) AS BIGINT)",
     "cbrtCH(x DOUBLE) RETURNS DOUBLE RETURN cbrt(x)",
     "erfApprox(x DOUBLE) RETURNS DOUBLE RETURN " +
       // Abramowitz–Stegun 7.1.26 (|err| < 1.5e-7) — Spark has no erf
@@ -666,15 +666,12 @@ object ClickHouseCompat {
       "timestamp_millis(1288834974657 + (id >> 22))",
     "dateTime64ToSnowflake(t TIMESTAMP) RETURNS BIGINT RETURN " +
       "shiftleft(unix_millis(t) - 1288834974657, 22)",
-    "toUnixTimestamp64Milli(t TIMESTAMP) RETURNS BIGINT RETURN unix_millis(t)",
-    "fromUnixTimestamp64Milli(n BIGINT) RETURNS TIMESTAMP RETURN timestamp_millis(n)",
     "toStartOfTenMinutes(t TIMESTAMP) RETURNS TIMESTAMP RETURN " +
       "timestamp_seconds((unix_micros(t) div 1000000 div 600) * 600)",
     "timeSlots(t TIMESTAMP, dur INT) RETURNS ARRAY<TIMESTAMP> RETURN " +
       "transform(sequence(unix_micros(t) div 1000000 div 1800, " +
       "(unix_micros(t) div 1000000 + dur) div 1800), " +
       "s -> timestamp_seconds(s * 1800))",
-    "translateUTF8(s STRING, f STRING, t STRING) RETURNS STRING RETURN translate(s, f, t)",
     "countMatches(s STRING, re STRING) RETURNS INT RETURN size(regexp_extract_all(s, re, 0))",
     "arrayProduct(a ARRAY<DOUBLE>) RETURNS DOUBLE RETURN " +
       "aggregate(a, 1D, (acc, x) -> acc * x)",
@@ -917,7 +914,6 @@ object ClickHouseCompat {
     "dateTrunc(unit STRING, t TIMESTAMP) RETURNS TIMESTAMP RETURN date_trunc(unit, t)",
     "timeDiff(a TIMESTAMP, b TIMESTAMP) RETURNS BIGINT RETURN " +
       "(unix_micros(b) - unix_micros(a)) div 1000000",
-    "toTimeZone(t TIMESTAMP, tz STRING) RETURNS TIMESTAMP RETURN from_utc_timestamp(t, tz)",
     "toTimezone(t TIMESTAMP, tz STRING) RETURNS TIMESTAMP RETURN from_utc_timestamp(t, tz)",
     "timezone() RETURNS STRING RETURN current_timezone()",
     "timezoneOf(t TIMESTAMP) RETURNS STRING RETURN current_timezone()",
@@ -1037,8 +1033,6 @@ object ClickHouseCompat {
     // `factorial` needs no alias — Spark's builtin matches the reference
     // contract (UInt64 range; CH throws above 20, Spark nulls)
     "countDigits(x BIGINT) RETURNS INT RETURN length(CAST(abs(x) AS STRING))",
-    "min2(a DOUBLE, b DOUBLE) RETURNS DOUBLE RETURN least(a, b)",
-    "max2(a DOUBLE, b DOUBLE) RETURNS DOUBLE RETURN greatest(a, b)",
     "positiveModulo(a BIGINT, b BIGINT) RETURNS BIGINT RETURN pmod(a, b)",
     "moduloLegacy(a BIGINT, b BIGINT) RETURNS BIGINT RETURN a % b",
     "isZeroOrNull(x DOUBLE) RETURNS BOOLEAN RETURN x IS NULL OR x = 0",
@@ -1283,7 +1277,7 @@ object ClickHouseCompat {
     // size (9/18/38 digits; the scale argument rounds — Spark DECIMAL
     // type scale is fixed per signature). toDecimal256 is the REAL
     // 256-bit scaled decimal in [[WideDecimal]] (past the 38-digit
-    // DecimalType cap), registered by installNative.
+    // DecimalType cap), registered in [[register]].
     // round-to-s with a non-foldable scale (Spark round() requires a
     // literal): half-away-from-zero via floor, the reference's rounding.
     def r(v: String) =
@@ -1353,8 +1347,6 @@ object ClickHouseCompat {
         "timestamp'1970-01-02 00:00:00' + make_interval(0, 0, 0, 0, hour(t), minute(t), second(t))",
       "toWeekOfWeekYear(d DATE) RETURNS INT RETURN weekofyear(d)",
       "toWeekYear(d DATE) RETURNS INT RETURN extract(YEAROFWEEK FROM d)",
-      "timeZoneOffset(t TIMESTAMP) RETURNS INT RETURN " +
-        "CAST(unix_timestamp(t) - unix_timestamp(to_utc_timestamp(t, current_timezone())) AS INT)",
       "timezoneOffset(t TIMESTAMP) RETURNS INT RETURN " +
         "CAST(unix_timestamp(t) - unix_timestamp(to_utc_timestamp(t, current_timezone())) AS INT)",
       "nowInBlock() RETURNS TIMESTAMP RETURN now()",
@@ -1984,47 +1976,48 @@ object ClickHouseCompat {
     }
   }
 
-  def installNative(spark: SparkSession): Unit = {
-    // best-effort datetime scanner (replaces the former try_cast macros;
-    // must precede the SQL-macro pass so macro bodies can reference it)
-    BestEffortDateTime.install(spark)
-    Blake3Md4.install(spark) // MD4 + BLAKE3 digests (published-vector pinned)
+  /** The ClickHouse-named surface: native functions, then every SQL
+    * definition, then the lambda-capable generic builders.
+    */
+  def register(r: FunctionSurface.Registrar): Unit = {
+    BestEffortDateTime.register(r) // best-effort datetime scanner
+    Blake3Md4.register(r) // MD4 + BLAKE3 digests (published-vector pinned)
     // Int128/UInt128/Int256/UInt256 — order-preserving binary encoding +
     // wraparound arithmetic, pinned to the reference's 01440 goldens
     // (ref src/DataTypes/DataTypeFactory.cpp:270-293)
-    WideInt.install(spark)
+    WideInt.register(r)
     // Decimal256 — 256-bit scaled decimal past Spark's 38-digit cap
     // (same encoding idea; checked overflow, CH scale rules)
-    WideDecimal.install(spark)
+    WideDecimal.register(r)
     // stem(lang, word): Snowball en/ru/fr ports (ref src/Functions/stem.cpp;
     // 01890 golden-pinned). Other libstemmer languages: identity, §2.9.
-    spark.udf.register("stem", (lang: String, word: String) =>
+    r.udf("stem", udf((lang: String, word: String) =>
       if (lang == null || word == null) null
-      else SnowballStem.stem(lang, word))
+      else SnowballStem.stem(lang, word)))
     // lemmatize/synonyms over the NlpDictionaries catalog (ref
     // src/Functions/{lemmatize,synonyms}.cpp; dictionaries are
     // user-registered, same as the reference's server-config files)
-    spark.udf.register("lemmatize", (dict: String, word: String) =>
-      NlpDictionaries.lemmatize(dict, word))
-    spark.udf.register("synonyms", (ext: String, token: String) =>
-      NlpDictionaries.synonyms(ext, token))
+    r.udf("lemmatize", udf((dict: String, word: String) =>
+      NlpDictionaries.lemmatize(dict, word)))
+    r.udf("synonyms", udf((ext: String, token: String) =>
+      NlpDictionaries.synonyms(ext, token)))
     // detectTonality / detectProgrammingLanguage: the reference's exact
     // scoring machines over user-registered model weights (the embedded
     // FrequencyHolder binaries are external artifacts — same
     // catalog-registration posture as lemmatize)
-    spark.udf.register("detectTonality", (s: String) =>
-      NlpDictionaries.detectTonality(s))
-    spark.udf.register("detectProgrammingLanguage", (s: String) =>
-      NlpDictionaries.detectProgrammingLanguage(s))
+    r.udf("detectTonality", udf((s: String) =>
+      NlpDictionaries.detectTonality(s)))
+    r.udf("detectProgrammingLanguage", udf((s: String) =>
+      NlpDictionaries.detectProgrammingLanguage(s)))
     // formatRow / formatRowNoNewline over the format surface (variadic
     // Catalyst expressions — ref src/Functions/formatRow.cpp)
-    FormatRow.install(spark)
+    FormatRow.register(r)
     // detectLanguageMixed (ref src/Functions/FunctionsLanguageDetection
     // — CLD2-backed in the reference): script-block classification per
     // word with the same stopword-driven 'en'/'un' split detectLanguage
     // uses for Latin text; returns language -> fraction. Documented
     // heuristic analog (no CLD2 model in scope).
-    spark.udf.register("detectLanguageMixed", (s: String) => {
+    r.udf("detectLanguageMixed", udf((s: String) => {
       if (s == null) Map.empty[String, Float]
       else {
         val words = s.split("[^\\p{L}]+").filter(_.nonEmpty)
@@ -2060,50 +2053,50 @@ object ClickHouseCompat {
             .map { case (l, g) => l -> g.length.toFloat / langs.length }
         }
       }
-    })
+    }))
     // region (geobase) dictionary family over the RegionDictionaries
     // catalog (ref FunctionsEmbeddedDictionaries.h; hierarchies are
     // user-registered, same as the reference's geobase files)
     locally {
       import RegionDictionaries._
-      spark.udf.register("regionToCity", (id: Long) => regionToCity(id))
-      spark.udf.register("regionToArea", (id: Long) => regionToArea(id))
-      spark.udf.register("regionToDistrict", (id: Long) => regionToDistrict(id))
-      spark.udf.register("regionToCountry", (id: Long) => regionToCountry(id))
-      spark.udf.register("regionToContinent", (id: Long) => regionToContinent(id))
-      spark.udf.register("regionToTopContinent",
-        (id: Long) => regionToTopContinent(id))
-      spark.udf.register("regionToPopulation",
-        (id: Long) => regionToPopulation(id))
-      spark.udf.register("regionIn", (l: Long, r: Long) => regionIn(l, r))
-      spark.udf.register("regionHierarchy", (id: Long) => regionHierarchy(id))
-      spark.udf.register("regionToName",
-        (id: Long, lang: String) => regionToName(id, lang))
+      r.udf("regionToCity", udf((id: Long) => regionToCity(id)))
+      r.udf("regionToArea", udf((id: Long) => regionToArea(id)))
+      r.udf("regionToDistrict", udf((id: Long) => regionToDistrict(id)))
+      r.udf("regionToCountry", udf((id: Long) => regionToCountry(id)))
+      r.udf("regionToContinent", udf((id: Long) => regionToContinent(id)))
+      r.udf("regionToTopContinent", udf(
+        (id: Long) => regionToTopContinent(id)))
+      r.udf("regionToPopulation", udf(
+        (id: Long) => regionToPopulation(id)))
+      r.udf("regionIn", udf((l: Long, r: Long) => regionIn(l, r)))
+      r.udf("regionHierarchy", udf((id: Long) => regionHierarchy(id)))
+      r.udf("regionToName", udf(
+        (id: Long, lang: String) => regionToName(id, lang)))
     }
     // ---- tranche 15 natives ----
     locally {
       import Tranche15._
       for ((n, w) <- Seq("UInt8" -> 1, "UInt16" -> 2, "UInt32" -> 4, "UInt64" -> 8))
-        spark.udf.register(s"reinterpretAs$n",
+        r.udf(s"reinterpretAs$n", udf(
           (s: String) => if (s == null) null.asInstanceOf[java.lang.Long]
-            else java.lang.Long.valueOf(leLong(strBytes(s), w)))
+            else java.lang.Long.valueOf(leLong(strBytes(s), w))))
       for ((n, w) <- Seq("Int8" -> 1, "Int16" -> 2, "Int32" -> 4, "Int64" -> 8))
-        spark.udf.register(s"reinterpretAs$n",
+        r.udf(s"reinterpretAs$n", udf(
           (s: String) => if (s == null) null.asInstanceOf[java.lang.Long]
-            else java.lang.Long.valueOf(signExtend(leLong(strBytes(s), w), w)))
-      spark.udf.register("reinterpretAsFloat32", (s: String) =>
-        java.lang.Float.intBitsToFloat(leLong(strBytes(s), 4).toInt))
-      spark.udf.register("reinterpretAsFloat64", (s: String) =>
-        java.lang.Double.longBitsToDouble(leLong(strBytes(s), 8)))
-      spark.udf.register("reinterpretAsString", (x: Long) => asString(x))
-      spark.udf.register("reinterpretAsFixedString", (x: Long) =>
-        new String(leBytes(x, 8), java.nio.charset.StandardCharsets.ISO_8859_1))
-      spark.udf.register("reinterpretAsDate", (x: Long) =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(x & 0xffffL)))
-      spark.udf.register("reinterpretAsDateTime", (x: Long) =>
-        java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(x & 0xffffffffL)))
-      spark.udf.register("reinterpretAsUUID", (s: String) => asUuid(s))
-      spark.udf.register("reinterpret", (s: String, t: String) => t match {
+            else java.lang.Long.valueOf(signExtend(leLong(strBytes(s), w), w))))
+      r.udf("reinterpretAsFloat32", udf((s: String) =>
+        java.lang.Float.intBitsToFloat(leLong(strBytes(s), 4).toInt)))
+      r.udf("reinterpretAsFloat64", udf((s: String) =>
+        java.lang.Double.longBitsToDouble(leLong(strBytes(s), 8))))
+      r.udf("reinterpretAsString", udf((x: Long) => asString(x)))
+      r.udf("reinterpretAsFixedString", udf((x: Long) =>
+        new String(leBytes(x, 8), java.nio.charset.StandardCharsets.ISO_8859_1)))
+      r.udf("reinterpretAsDate", udf((x: Long) =>
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(x & 0xffffL))))
+      r.udf("reinterpretAsDateTime", udf((x: Long) =>
+        java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(x & 0xffffffffL))))
+      r.udf("reinterpretAsUUID", udf((s: String) => asUuid(s)))
+      r.udf("reinterpret", udf((s: String, t: String) => t match {
         case "String" => s
         case "Float32" => java.lang.Float.intBitsToFloat(leLong(strBytes(s), 4).toInt).toString
         case "Float64" => java.lang.Double.longBitsToDouble(leLong(strBytes(s), 8)).toString
@@ -2113,81 +2106,80 @@ object ClickHouseCompat {
           { val w = tt.stripPrefix("Int").toInt / 8
             signExtend(leLong(strBytes(s), w), w).toString }
         case _ => null
-      })
-      spark.udf.register("replaceRegexpOne",
-        (s: String, p: String, r: String) => replaceRegexpOne(s, p, r))
-      spark.udf.register("convertCharset",
-        (s: String, f: String, t: String) => convertCharset(s, f, t))
-      spark.udf.register("generateULID", () => generateULID())
-      spark.udf.register("ULIDStringToDateTime", (s: String) =>
+      }))
+      r.udf("replaceRegexpOne", udf(
+        (s: String, p: String, r: String) => replaceRegexpOne(s, p, r)))
+      r.udf("convertCharset", udf(
+        (s: String, f: String, t: String) => convertCharset(s, f, t)))
+      r.udf("generateULID", udf(() => generateULID()))
+      r.udf("ULIDStringToDateTime", udf((s: String) =>
         if (s == null || s.length < 10) null
-        else java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(ulidToMillis(s))))
-      spark.udf.register("proportionsZTest",
+        else java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(ulidToMillis(s)))))
+      r.udf("proportionsZTest", udf(
         (sx: Long, sy: Long, tx: Long, ty: Long, conf: Double) =>
-          proportionsZTest(sx, sy, tx, ty, conf))
-      spark.udf.register("minSampleSizeContinous",
+          proportionsZTest(sx, sy, tx, ty, conf)))
+      r.udf("minSampleSizeContinous", udf(
         (b: Double, s: Double, m: Double, pw: Double, a: Double) =>
-          minSampleSizeContinous(b, s, m, pw, a))
-      spark.udf.register("minSampleSizeConversion",
+          minSampleSizeContinous(b, s, m, pw, a)))
+      r.udf("minSampleSizeConversion", udf(
         (p1: Double, m: Double, pw: Double, a: Double) =>
-          minSampleSizeConversion(p1, m, pw, a))
+          minSampleSizeConversion(p1, m, pw, a)))
       for ((name, alg) <- Seq("SHA224" -> "SHA-224", "SHA384" -> "SHA-384",
           "SHA512" -> "SHA-512"))
-        spark.udf.register(name, (s: String) =>
-          if (s == null) null else digest(alg, s))
-      spark.udf.register("CRC32IEEE", (s: String) => crc32Ieee(s))
-      spark.udf.register("CRC64", (s: String) => crc64(s))
-      spark.udf.register("filesystemAvailable",
-        () => new java.io.File("/").getUsableSpace)
-      spark.udf.register("filesystemCapacity",
-        () => new java.io.File("/").getTotalSpace)
-      spark.udf.register("filesystemUnreserved",
-        () => new java.io.File("/").getFreeSpace)
-      spark.udf.register("getOSKernelVersion", () =>
-        System.getProperty("os.name") + " " + System.getProperty("os.version"))
-      val appId = spark.sparkContext.applicationId
+        r.udf(name, udf((s: String) =>
+          if (s == null) null else digest(alg, s)))
+      r.udf("CRC32IEEE", udf((s: String) => crc32Ieee(s)))
+      r.udf("CRC64", udf((s: String) => crc64(s)))
+      r.udf("filesystemAvailable", udf(
+        () => new java.io.File("/").getUsableSpace))
+      r.udf("filesystemCapacity", udf(
+        () => new java.io.File("/").getTotalSpace))
+      r.udf("filesystemUnreserved", udf(
+        () => new java.io.File("/").getFreeSpace))
+      r.udf("getOSKernelVersion", udf(() =>
+        System.getProperty("os.name") + " " + System.getProperty("os.version")))
       for (n <- Seq("queryID", "query_id", "initialQueryID", "initial_query_id"))
-        spark.udf.register(n, () => appId)
-      spark.udf.register("geohashesInBox",
+        r.udf(n, udf(() => org.apache.spark.SparkEnv.get.conf.getAppId))
+      r.udf("geohashesInBox", udf(
         (lonMin: Double, latMin: Double, lonMax: Double, latMax: Double,
-         prec: Int) => geohashesInBox(lonMin, latMin, lonMax, latMax, prec))
+         prec: Int) => geohashesInBox(lonMin, latMin, lonMax, latMax, prec)))
     }
-    spark.udf.register("regexpQuoteMeta", (s: String) => Tranche10.regexpQuoteMeta(s))
-    spark.udf.register("extractGroups", (h: String, p: String) => Tranche10.extractGroups(h, p))
-    spark.udf.register("extractAllGroupsHorizontal",
-      (h: String, p: String) => Tranche10.extractAllGroupsHorizontal(h, p))
-    spark.udf.register("extractAllGroupsVertical",
-      (h: String, p: String) => Tranche10.extractAllGroupsVertical(h, p))
-    spark.udf.register("decodeXMLComponent", (s: String) => Tranche10.decodeXMLComponent(s))
-    spark.udf.register("extractTextFromHTML", (s: String) => Tranche10.extractTextFromHTML(s))
-    spark.udf.register("parseTimeDelta", (s: String) => Tranche10.parseTimeDelta(s))
-    spark.udf.register("gcd", (a: Long, b: Long) => Tranche10.gcd(a, b))
-    spark.udf.register("lcm", (a: Long, b: Long) => Tranche10.lcm(a, b))
-    spark.udf.register("erf", (x: Double) =>
-      org.apache.commons.math3.special.Erf.erf(x))
-    spark.udf.register("erfc", (x: Double) =>
-      org.apache.commons.math3.special.Erf.erfc(x))
+    r.udf("regexpQuoteMeta", udf((s: String) => Tranche10.regexpQuoteMeta(s)))
+    r.udf("extractGroups", udf((h: String, p: String) => Tranche10.extractGroups(h, p)))
+    r.udf("extractAllGroupsHorizontal", udf(
+      (h: String, p: String) => Tranche10.extractAllGroupsHorizontal(h, p)))
+    r.udf("extractAllGroupsVertical", udf(
+      (h: String, p: String) => Tranche10.extractAllGroupsVertical(h, p)))
+    r.udf("decodeXMLComponent", udf((s: String) => Tranche10.decodeXMLComponent(s)))
+    r.udf("extractTextFromHTML", udf((s: String) => Tranche10.extractTextFromHTML(s)))
+    r.udf("parseTimeDelta", udf((s: String) => Tranche10.parseTimeDelta(s)))
+    r.udf("gcd", udf((a: Long, b: Long) => Tranche10.gcd(a, b)))
+    r.udf("lcm", udf((a: Long, b: Long) => Tranche10.lcm(a, b)))
+    r.udf("erf", udf((x: Double) =>
+      org.apache.commons.math3.special.Erf.erf(x)))
+    r.udf("erfc", udf((x: Double) =>
+      org.apache.commons.math3.special.Erf.erfc(x)))
     // server introspection: single-JVM "server" identity (hostName/FQDN
     // per InetAddress; serverUUID stable for the JVM lifetime; uptime
     // from JVM start — the reference's server-process counterparts)
-    spark.udf.register("hostName", () => Tranche10.LocalHost.name)
-    spark.udf.register("FQDN", () => Tranche10.LocalHost.fqdn)
+    r.udf("hostName", udf(() => Tranche10.LocalHost.name))
+    r.udf("FQDN", udf(() => Tranche10.LocalHost.fqdn))
     // FunctionFQDN.cpp:50 registers the alias spelling too
-    spark.udf.register("fullHostName", () => Tranche10.LocalHost.fqdn)
-    spark.udf.register("serverUUID", () => Tranche10.LocalHost.uuid)
-    spark.udf.register("uptime", () =>
+    r.udf("fullHostName", udf(() => Tranche10.LocalHost.fqdn))
+    r.udf("serverUUID", udf(() => Tranche10.LocalHost.uuid))
+    r.udf("uptime", udf(() =>
       (System.currentTimeMillis() -
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1000L)
-    spark.udf.register("jumpConsistentHash",
-      (k: Long, b: Int) => Tranche10.jumpConsistentHash(k, b))
+        java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1000L))
+    r.udf("jumpConsistentHash", udf(
+      (k: Long, b: Int) => Tranche10.jumpConsistentHash(k, b)))
     for (n <- Seq("kostikConsistentHash", "yandexConsistentHash"))
-      spark.udf.register(n, (x: Long, b: Int) => KostikConsistentHash(x, b))
+      r.udf(n, udf((x: Long, b: Int) => KostikConsistentHash(x, b)))
     // arrayPartialShuffle(arr, limit, seed): Fisher–Yates cut off after
     // `limit` positions (0 = full shuffle) — the reference documents the
     // permutation itself as unspecified, only the contract matters:
     // first `limit` elements are a uniform sample, tail preserves the
     // rest, deterministic per seed
-    spark.udf.register("arrayPartialShuffle",
+    r.udf("arrayPartialShuffle", udf(
       (arr: Seq[String], limit: Int, seed: Long) => {
         if (arr == null) null
         else {
@@ -2203,34 +2195,34 @@ object ClickHouseCompat {
           }
           a.toSeq
         }
-      })
-    spark.udf.register("mortonEncode",
-      (x: Long, y: Long) => Tranche10.mortonEncode(x, y))
-    spark.udf.register("mortonDecode", (z: Long) => Tranche10.mortonDecode(z))
-    spark.udf.register("base58Encode", (s: String) => Codecs.base58Encode(s))
-    spark.udf.register("base58Decode", (s: String) => Codecs.base58Decode(s))
-    spark.udf.register("tryBase58Decode", (s: String) => Codecs.tryBase58Decode(s))
-    spark.udf.register("punycodeEncode", (s: String) => Codecs.punycodeEncode(s))
-    spark.udf.register("punycodeDecode", (s: String) => Codecs.punycodeDecode(s))
-    spark.udf.register("tryPunycodeDecode", (s: String) => Codecs.tryPunycodeDecode(s))
-    spark.udf.register("idnaEncode", (s: String) => Codecs.idnaEncode(s))
-    spark.udf.register("idnaDecode", (s: String) => Codecs.idnaDecode(s))
-    spark.udf.register("tryIdnaEncode", (s: String) => Codecs.tryIdnaEncode(s))
+      }))
+    r.udf("mortonEncode", udf(
+      (x: Long, y: Long) => Tranche10.mortonEncode(x, y)))
+    r.udf("mortonDecode", udf((z: Long) => Tranche10.mortonDecode(z)))
+    r.udf("base58Encode", udf((s: String) => Codecs.base58Encode(s)))
+    r.udf("base58Decode", udf((s: String) => Codecs.base58Decode(s)))
+    r.udf("tryBase58Decode", udf((s: String) => Codecs.tryBase58Decode(s)))
+    r.udf("punycodeEncode", udf((s: String) => Codecs.punycodeEncode(s)))
+    r.udf("punycodeDecode", udf((s: String) => Codecs.punycodeDecode(s)))
+    r.udf("tryPunycodeDecode", udf((s: String) => Codecs.tryPunycodeDecode(s)))
+    r.udf("idnaEncode", udf((s: String) => Codecs.idnaEncode(s)))
+    r.udf("idnaDecode", udf((s: String) => Codecs.idnaDecode(s)))
+    r.udf("tryIdnaEncode", udf((s: String) => Codecs.tryIdnaEncode(s)))
     // Unicode normalization forms (normalizeUTF8*.cpp) via java.text
     for ((name, form) <- Seq(
         "normalizeUTF8NFC" -> java.text.Normalizer.Form.NFC,
         "normalizeUTF8NFD" -> java.text.Normalizer.Form.NFD,
         "normalizeUTF8NFKC" -> java.text.Normalizer.Form.NFKC,
         "normalizeUTF8NFKD" -> java.text.Normalizer.Form.NFKD)) {
-      spark.udf.register(name, (s: String) =>
-        if (s == null) null else java.text.Normalizer.normalize(s, form))
+      r.udf(name, udf((s: String) =>
+        if (s == null) null else java.text.Normalizer.normalize(s, form)))
     }
     // log-gamma / gamma via commons-math3 (on Spark's own classpath)
-    spark.udf.register("lgamma", (x: Double) =>
-      org.apache.commons.math3.special.Gamma.logGamma(x))
-    spark.udf.register("tgamma", (x: Double) =>
-      org.apache.commons.math3.special.Gamma.gamma(x))
-    spark.udf.register("isValidUTF8", (b: Array[Byte]) => {
+    r.udf("lgamma", udf((x: Double) =>
+      org.apache.commons.math3.special.Gamma.logGamma(x)))
+    r.udf("tgamma", udf((x: Double) =>
+      org.apache.commons.math3.special.Gamma.gamma(x)))
+    r.udf("isValidUTF8", udf((b: Array[Byte]) => {
       val r: java.lang.Boolean =
         if (b == null) null
         else {
@@ -2242,55 +2234,30 @@ object ClickHouseCompat {
           }
         }
       r
-    })
-    TypeFronts.installNative(spark)
-    ScalarTranche18.install(spark) // frequency-ranked §2.9 residual head
-    ScalarTranche19.install(spark) // block-order family + fuzzy multi-regex
-    ScalarTranche20.install(spark) // IN-operator function family + _CAST
-    ScalarTranche21.install(spark) // validateNestedArraySizes/globalVariable/getMacro/logTrace/buildId
-    StringSketchHash.install(spark)
-    HashParity.install(spark)
-    DateTimeFormat.install(spark)
-    GeoGrid.install(spark)
-    Geometry.install(spark) // boost::geometry polygon family
-    ThetaSketch.install(spark) // KMV sketch + uniqTheta set algebra
-    TldLists.install(spark) // custom TLD lists + *Custom subdomain family
+    }))
+    TypeFronts.register(r)
+    ScalarTranche18.register(r) // frequency-ranked §2.9 residual head
+    ScalarTranche19.register(r) // block-order family + fuzzy multi-regex
+    ScalarTranche20.register(r) // IN-operator function family + _CAST
+    ScalarTranche21.register(r) // validateNestedArraySizes/globalVariable/getMacro/logTrace/buildId
+    StringSketchHash.register(r)
+    HashParity.register(r)
+    DateTimeFormat.register(r)
+    GeoGrid.register(r)
+    Geometry.register(r) // boost::geometry polygon family
+    ThetaSketch.register(r) // KMV sketch + uniqTheta set algebra
+    TldLists.register(r) // custom TLD lists + *Custom subdomain family
     // bitSlice: 2- and 3-arg forms share one name via a registry builder
     // that pads the missing length (Spark scala UDFs are fixed-arity)
-    spark.udf.register("bitSlice3Internal",
-      (s: Array[Byte], off: Int, len: Int) => BitOps.bitSlice(s, off, len))
-    locally {
-      import org.apache.spark.sql.catalyst.FunctionIdentifier
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-      import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("bitSlice"),
-        new ExpressionInfo(getClass.getName, "bitSlice"),
-        (children: Seq[Expression]) => {
-          val full =
-            if (children.size == 2) children :+ Literal(Int.MaxValue)
-            else children
-          UnresolvedFunction("bitSlice3Internal", full, isDistinct = false)
-        })
+    r.udf("bitSlice3Internal", udf(
+      (s: Array[Byte], off: Int, len: Int) => BitOps.bitSlice(s, off, len)))
+    r.expr("bitSlice") { children =>
+      val full =
+        if (children.size == 2) children :+ Literal(Int.MaxValue)
+        else children
+      UnresolvedFunction("bitSlice3Internal", full, isDistinct = false)
     }
-  }
-
-  /** Install all aliases (CREATE OR REPLACE, idempotent); returns names
-    * that failed (e.g. a future Spark version claiming a name as an
-    * unreplaceable built-in).
-    */
-  def install(spark: SparkSession): Seq[String] = {
-    if (sys.env.contains("SPARK_GRAFT_SKIP_COMPAT")) return Nil // bisection only
-    if (!sys.env.contains("SPARK_GRAFT_SKIP_NATIVE")) installNative(spark)
-    val failed =
-      if (sys.env.contains("SPARK_GRAFT_SKIP_SQLDEFS")) Nil
-      else definitions.flatMap { d =>
-        try { spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $d"); None }
-        catch { case _: Exception => Some(d.takeWhile(_ != '(')) }
-      }
-    // After the SQL pass: the lambda-capable generic builders replace
-    // any same-named macro.
-    if (!sys.env.contains("SPARK_GRAFT_SKIP_HO")) HigherOrder.install(spark)
-    failed
+    definitions.foreach(r.sql)
+    HigherOrder.register(r) // lambda-capable generic builders
   }
 }

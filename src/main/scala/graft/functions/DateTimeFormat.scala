@@ -4,7 +4,7 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatterBuilder
 import java.time.temporal.{ChronoField, WeekFields}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.udf
 
 /** MySQL-style `%`-spec date/time formatting and parsing — the reference's
   * `formatDateTime(t, format)` / `parseDateTime(s, format)` pair
@@ -170,15 +170,15 @@ object DateTimeFormat {
       if (r == null) java.sql.Timestamp.from(Instant.EPOCH) else r
     } catch { case _: Exception => java.sql.Timestamp.from(Instant.EPOCH) }
 
-  def install(spark: SparkSession): Unit = {
-    spark.udf.register("formatDateTime",
-      (t: java.sql.Timestamp, f: String) => formatCH(t, f))
-    spark.udf.register("parseDateTime",
-      (s: String, f: String) => parseCH(s, f))
-    spark.udf.register("parseDateTimeOrNull",
-      (s: String, f: String) => parseCHOrNull(s, f))
-    spark.udf.register("parseDateTimeOrZero",
-      (s: String, f: String) => parseCHOrZero(s, f))
+  def register(r: FunctionSurface.Registrar): Unit = {
+    r.udf("formatDateTime", udf(
+      (t: java.sql.Timestamp, f: String) => formatCH(t, f)))
+    r.udf("parseDateTime", udf(
+      (s: String, f: String) => parseCH(s, f)))
+    r.udf("parseDateTimeOrNull", udf(
+      (s: String, f: String) => parseCHOrNull(s, f)))
+    r.udf("parseDateTimeOrZero", udf(
+      (s: String, f: String) => parseCHOrZero(s, f)))
     // parseDateTimeInJodaSyntax / formatDateTimeInJodaSyntax stay SQL
     // macros in ClickHouseCompat (Joda patterns ≈ java.time's grammar).
   }

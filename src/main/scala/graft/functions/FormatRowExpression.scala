@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -79,12 +78,8 @@ case class FormatRow(noNewline: Boolean, children: Seq[Expression],
 }
 
 object FormatRow {
-  def install(spark: SparkSession): Unit = {
-    for ((name, noNl) <- Seq("formatRow" -> false, "formatRowNoNewline" -> true)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[FormatRow].getName, name),
-        (children: Seq[Expression]) => FormatRow(noNl, children))
-    }
+  def register(r: FunctionSurface.Registrar): Unit = {
+    for ((name, noNl) <- Seq("formatRow" -> false, "formatRowNoNewline" -> true))
+      r.expr(name)(children => FormatRow(noNl, children))
   }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.udf
 
 /** `multiFuzzyMatchAny` / `multiFuzzyMatchAnyIndex` /
   * `multiFuzzyMatchAllIndices` — approximate (edit-distance) multi-regex
@@ -313,25 +313,25 @@ object FuzzyRegex {
       case (p, i) if matches(hay, p, maxDist) => (i + 1).toLong
     }
 
-  def install(spark: SparkSession): Unit = {
+  def register(r: FunctionSurface.Registrar): Unit = {
     // evaluate EVERY pattern (no short-circuit): the reference validates
     // the whole pattern set at compile time, so a bad distance/pattern
     // errors even when an earlier pattern already matched
-    spark.udf.register("multiFuzzyMatchAny",
+    r.udf("multiFuzzyMatchAny", udf(
       (h: String, d: Int, ps: Seq[String]) =>
         if (h == null || ps == null) null
         else java.lang.Boolean.valueOf(
-          ps.map(matches(h, _, d)).contains(true)))
-    spark.udf.register("multiFuzzyMatchAnyIndex",
+          ps.map(matches(h, _, d)).contains(true))))
+    r.udf("multiFuzzyMatchAnyIndex", udf(
       (h: String, d: Int, ps: Seq[String]) =>
         if (h == null || ps == null) null
         else java.lang.Long.valueOf(
           ps.map(matches(h, _, d)).indexOf(true) match {
             case -1 => 0L
             case i => (i + 1).toLong
-          }))
-    spark.udf.register("multiFuzzyMatchAllIndices",
+          })))
+    r.udf("multiFuzzyMatchAllIndices", udf(
       (h: String, d: Int, ps: Seq[String]) =>
-        if (h == null || ps == null) null else allIndices(h, d, ps))
+        if (h == null || ps == null) null else allIndices(h, d, ps)))
   }
 }

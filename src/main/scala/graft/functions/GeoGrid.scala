@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.udf
 
 /** H3 / S2 discrete-global-grid functions (SURVEY §2.9; reference
   * `/root/reference/src/Functions/h3*.cpp`, `s2*.cpp`, which delegate to
@@ -565,96 +565,96 @@ object GeoGrid {
     }
   }
 
-  def install(spark: SparkSession): Unit = {
+  def register(r: FunctionSurface.Registrar): Unit = {
     // H3 — predicates return Int 0/1 (the reference's UInt8)
-    spark.udf.register("h3IsValid", (h: Long) => if (H3.isValid(h)) 1 else 0)
-    spark.udf.register("h3GetResolution", (h: Long) => H3.resolution(h))
-    spark.udf.register("h3GetBaseCell", (h: Long) => H3.baseCell(h))
-    spark.udf.register("h3IsPentagon", (h: Long) => if (H3.isPentagon(h)) 1 else 0)
-    spark.udf.register("h3IsResClassIII", (h: Long) => if (H3.isResClassIII(h)) 1 else 0)
-    spark.udf.register("h3ToParent", (h: Long, r: Int) => H3.toParent(h, r))
-    spark.udf.register("h3ToCenterChild", (h: Long, r: Int) => H3.toCenterChild(h, r))
-    spark.udf.register("h3ToChildren", (h: Long, r: Int) => H3.toChildren(h, r))
-    spark.udf.register("h3ToString", (h: Long) => H3.toStringHex(h))
-    spark.udf.register("stringToH3", (s: String) => H3.fromString(s))
-    spark.udf.register("h3NumHexagons", (r: Int) => H3.numHexagons(r))
-    spark.udf.register("h3GetRes0Indexes", () => H3.res0Indexes)
-    spark.udf.register("h3GetPentagonIndexes", (r: Int) => H3.pentagonIndexes(r))
-    spark.udf.register("h3EdgeLengthM", (r: Int) => H3.edgeLengthMOf(r))
-    spark.udf.register("h3EdgeLengthKm", (r: Int) => H3.edgeLengthKmOf(r))
-    spark.udf.register("h3HexAreaM2", (r: Int) => H3.hexAreaM2Of(r))
-    spark.udf.register("h3HexAreaKm2", (r: Int) => H3.hexAreaKm2Of(r))
-    spark.udf.register("h3EdgeAngle", (r: Int) => H3.edgeAngle(r))
+    r.udf("h3IsValid", udf((h: Long) => if (H3.isValid(h)) 1 else 0))
+    r.udf("h3GetResolution", udf((h: Long) => H3.resolution(h)))
+    r.udf("h3GetBaseCell", udf((h: Long) => H3.baseCell(h)))
+    r.udf("h3IsPentagon", udf((h: Long) => if (H3.isPentagon(h)) 1 else 0))
+    r.udf("h3IsResClassIII", udf((h: Long) => if (H3.isResClassIII(h)) 1 else 0))
+    r.udf("h3ToParent", udf((h: Long, r: Int) => H3.toParent(h, r)))
+    r.udf("h3ToCenterChild", udf((h: Long, r: Int) => H3.toCenterChild(h, r)))
+    r.udf("h3ToChildren", udf((h: Long, r: Int) => H3.toChildren(h, r)))
+    r.udf("h3ToString", udf((h: Long) => H3.toStringHex(h)))
+    r.udf("stringToH3", udf((s: String) => H3.fromString(s)))
+    r.udf("h3NumHexagons", udf((r: Int) => H3.numHexagons(r)))
+    r.udf("h3GetRes0Indexes", udf(() => H3.res0Indexes))
+    r.udf("h3GetPentagonIndexes", udf((r: Int) => H3.pentagonIndexes(r)))
+    r.udf("h3EdgeLengthM", udf((r: Int) => H3.edgeLengthMOf(r)))
+    r.udf("h3EdgeLengthKm", udf((r: Int) => H3.edgeLengthKmOf(r)))
+    r.udf("h3HexAreaM2", udf((r: Int) => H3.hexAreaM2Of(r)))
+    r.udf("h3HexAreaKm2", udf((r: Int) => H3.hexAreaKm2Of(r)))
+    r.udf("h3EdgeAngle", udf((r: Int) => H3.edgeAngle(r)))
     // H3 geometric core (H3Core: icosahedral projection + grid traversal;
     // reference h3ToGeo.cpp / geoToH3.cpp / h3kRing.cpp / h3HexRing.cpp /
     // h3Distance.cpp / h3Line.cpp / h3GetFaces.cpp / h3PointDist.cpp —
     // note the reference's h3Distance returns gridPathCellsSize, i.e.
     // grid distance + 1)
-    spark.udf.register("geoToH3",
-      (lon: Double, lat: Double, res: Int) => H3Core.geoToH3(lon, lat, res))
-    spark.udf.register("h3ToGeo", (h: Long) => H3Core.h3ToGeo(h))
-    spark.udf.register("h3kRing", (h: Long, k: Int) => H3Core.kRing(h, k).sorted)
-    spark.udf.register("h3HexRing", (h: Long, k: Int) => H3Core.hexRing(h, k).sorted)
-    spark.udf.register("h3Distance",
-      (a: Long, b: Long) => H3Core.gridDistance(a, b) + 1L)
-    spark.udf.register("h3Line", (a: Long, b: Long) => H3Core.h3Line(a, b))
-    spark.udf.register("h3GetFaces", (h: Long) => H3Core.getFaces(h))
-    spark.udf.register("h3IndexesAreNeighbors",
-      (a: Long, b: Long) => if (H3Core.areNeighbors(a, b)) 1 else 0)
+    r.udf("geoToH3", udf(
+      (lon: Double, lat: Double, res: Int) => H3Core.geoToH3(lon, lat, res)))
+    r.udf("h3ToGeo", udf((h: Long) => H3Core.h3ToGeo(h)))
+    r.udf("h3kRing", udf((h: Long, k: Int) => H3Core.kRing(h, k).sorted))
+    r.udf("h3HexRing", udf((h: Long, k: Int) => H3Core.hexRing(h, k).sorted))
+    r.udf("h3Distance", udf(
+      (a: Long, b: Long) => H3Core.gridDistance(a, b) + 1L))
+    r.udf("h3Line", udf((a: Long, b: Long) => H3Core.h3Line(a, b)))
+    r.udf("h3GetFaces", udf((h: Long) => H3Core.getFaces(h)))
+    r.udf("h3IndexesAreNeighbors", udf(
+      (a: Long, b: Long) => if (H3Core.areNeighbors(a, b)) 1 else 0))
     // boundary / area / exact-edge / unidirectional-edge tranche
     // (h3ToGeoBoundary.cpp, h3CellAreaM2.cpp, h3ExactEdgeLengthM.cpp,
     // h3GetUnidirectionalEdge.cpp and friends — H3Core boundary machinery)
-    spark.udf.register("h3ToGeoBoundary", (h: Long) => H3Core.cellBoundaryDeg(h))
-    spark.udf.register("h3CellAreaRads2", (h: Long) => H3Core.cellAreaRads2(h))
-    spark.udf.register("h3CellAreaM2", (h: Long) =>
-      H3Core.cellAreaRads2(h) * H3Core.EarthRadiusKm * H3Core.EarthRadiusKm * 1.0e6)
-    spark.udf.register("h3ExactEdgeLengthRads", (e: Long) => H3Core.exactEdgeLengthRads(e))
-    spark.udf.register("h3ExactEdgeLengthKm", (e: Long) =>
-      H3Core.exactEdgeLengthRads(e) * H3Core.EarthRadiusKm)
-    spark.udf.register("h3ExactEdgeLengthM", (e: Long) =>
-      H3Core.exactEdgeLengthRads(e) * H3Core.EarthRadiusKm * 1000.0)
-    spark.udf.register("h3GetUnidirectionalEdge",
-      (a: Long, b: Long) => H3Core.edgeFromCells(a, b))
-    spark.udf.register("h3GetOriginIndexFromUnidirectionalEdge",
-      (e: Long) => H3Core.edgeOrigin(e))
-    spark.udf.register("h3GetDestinationIndexFromUnidirectionalEdge",
-      (e: Long) => H3Core.edgeDestination(e))
-    spark.udf.register("h3GetIndexesFromUnidirectionalEdge",
-      (e: Long) => (H3Core.edgeOrigin(e), H3Core.edgeDestination(e)))
-    spark.udf.register("h3GetUnidirectionalEdgesFromHexagon",
-      (h: Long) => H3Core.edgesFromCell(h))
-    spark.udf.register("h3GetUnidirectionalEdgeBoundary",
-      (e: Long) => H3Core.edgeBoundaryDeg(e))
-    spark.udf.register("h3UnidirectionalEdgeIsValid",
-      (e: Long) => if (H3Core.edgeIsValid(e)) 1 else 0)
+    r.udf("h3ToGeoBoundary", udf((h: Long) => H3Core.cellBoundaryDeg(h)))
+    r.udf("h3CellAreaRads2", udf((h: Long) => H3Core.cellAreaRads2(h)))
+    r.udf("h3CellAreaM2", udf((h: Long) =>
+      H3Core.cellAreaRads2(h) * H3Core.EarthRadiusKm * H3Core.EarthRadiusKm * 1.0e6))
+    r.udf("h3ExactEdgeLengthRads", udf((e: Long) => H3Core.exactEdgeLengthRads(e)))
+    r.udf("h3ExactEdgeLengthKm", udf((e: Long) =>
+      H3Core.exactEdgeLengthRads(e) * H3Core.EarthRadiusKm))
+    r.udf("h3ExactEdgeLengthM", udf((e: Long) =>
+      H3Core.exactEdgeLengthRads(e) * H3Core.EarthRadiusKm * 1000.0))
+    r.udf("h3GetUnidirectionalEdge", udf(
+      (a: Long, b: Long) => H3Core.edgeFromCells(a, b)))
+    r.udf("h3GetOriginIndexFromUnidirectionalEdge", udf(
+      (e: Long) => H3Core.edgeOrigin(e)))
+    r.udf("h3GetDestinationIndexFromUnidirectionalEdge", udf(
+      (e: Long) => H3Core.edgeDestination(e)))
+    r.udf("h3GetIndexesFromUnidirectionalEdge", udf(
+      (e: Long) => (H3Core.edgeOrigin(e), H3Core.edgeDestination(e))))
+    r.udf("h3GetUnidirectionalEdgesFromHexagon", udf(
+      (h: Long) => H3Core.edgesFromCell(h)))
+    r.udf("h3GetUnidirectionalEdgeBoundary", udf(
+      (e: Long) => H3Core.edgeBoundaryDeg(e)))
+    r.udf("h3UnidirectionalEdgeIsValid", udf(
+      (e: Long) => if (H3Core.edgeIsValid(e)) 1 else 0))
     val earthKm = 6371.007180918475
     def haversineRads(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
       val (p1, p2) = (math.toRadians(lat1), math.toRadians(lat2))
       val sl = math.sin((p2 - p1) / 2); val so = math.sin(math.toRadians(lon2 - lon1) / 2)
       2 * math.asin(math.min(1.0, math.sqrt(sl * sl + math.cos(p1) * math.cos(p2) * so * so)))
     }
-    spark.udf.register("h3PointDistRads", haversineRads _)
-    spark.udf.register("h3PointDistKm",
-      (a: Double, b: Double, c: Double, d: Double) => haversineRads(a, b, c, d) * earthKm)
-    spark.udf.register("h3PointDistM",
-      (a: Double, b: Double, c: Double, d: Double) => haversineRads(a, b, c, d) * earthKm * 1000.0)
+    r.udf("h3PointDistRads", udf(haversineRads _))
+    r.udf("h3PointDistKm", udf(
+      (a: Double, b: Double, c: Double, d: Double) => haversineRads(a, b, c, d) * earthKm))
+    r.udf("h3PointDistM", udf(
+      (a: Double, b: Double, c: Double, d: Double) => haversineRads(a, b, c, d) * earthKm * 1000.0))
     // S2
-    spark.udf.register("geoToS2", (lon: Double, lat: Double) => S2.geoToS2(lon, lat))
-    spark.udf.register("s2ToGeo", (id: Long) => S2.s2ToGeo(id))
-    spark.udf.register("s2GetNeighbors", (id: Long) => S2.getEdgeNeighbors(id))
-    spark.udf.register("s2CellsIntersect",
-      (a: Long, b: Long) => if (S2.cellsIntersect(a, b)) 1 else 0)
-    spark.udf.register("s2CapContains",
-      (c: Long, r: Double, p: Long) => if (S2.capContains(c, r, p)) 1 else 0)
-    spark.udf.register("s2CapUnion",
-      (c1: Long, r1: Double, c2: Long, r2: Double) => S2.capUnion(c1, r1, c2, r2))
-    spark.udf.register("s2RectAdd",
-      (lo: Long, hi: Long, p: Long) => S2.rectAdd(lo, hi, p))
-    spark.udf.register("s2RectContains",
-      (lo: Long, hi: Long, p: Long) => if (S2.rectContains(lo, hi, p)) 1 else 0)
-    spark.udf.register("s2RectUnion",
-      (lo1: Long, hi1: Long, lo2: Long, hi2: Long) => S2.rectUnion(lo1, hi1, lo2, hi2))
-    spark.udf.register("s2RectIntersection",
-      (lo1: Long, hi1: Long, lo2: Long, hi2: Long) => S2.rectIntersection(lo1, hi1, lo2, hi2))
+    r.udf("geoToS2", udf((lon: Double, lat: Double) => S2.geoToS2(lon, lat)))
+    r.udf("s2ToGeo", udf((id: Long) => S2.s2ToGeo(id)))
+    r.udf("s2GetNeighbors", udf((id: Long) => S2.getEdgeNeighbors(id)))
+    r.udf("s2CellsIntersect", udf(
+      (a: Long, b: Long) => if (S2.cellsIntersect(a, b)) 1 else 0))
+    r.udf("s2CapContains", udf(
+      (c: Long, r: Double, p: Long) => if (S2.capContains(c, r, p)) 1 else 0))
+    r.udf("s2CapUnion", udf(
+      (c1: Long, r1: Double, c2: Long, r2: Double) => S2.capUnion(c1, r1, c2, r2)))
+    r.udf("s2RectAdd", udf(
+      (lo: Long, hi: Long, p: Long) => S2.rectAdd(lo, hi, p)))
+    r.udf("s2RectContains", udf(
+      (lo: Long, hi: Long, p: Long) => if (S2.rectContains(lo, hi, p)) 1 else 0))
+    r.udf("s2RectUnion", udf(
+      (lo1: Long, hi1: Long, lo2: Long, hi2: Long) => S2.rectUnion(lo1, hi1, lo2, hi2)))
+    r.udf("s2RectIntersection", udf(
+      (lo1: Long, hi1: Long, lo2: Long, hi2: Long) => S2.rectIntersection(lo1, hi1, lo2, hi2)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.udf
 
 import scala.collection.mutable
 
@@ -517,76 +517,76 @@ object Geometry extends Serializable {
 
   // ---- registration ------------------------------------------------------
 
-  def install(spark: SparkSession): Unit = {
+  def register(r: FunctionSurface.Registrar): Unit = {
     def mp(m: TMulti): MultiPoly = toMp(m)
 
-    spark.udf.register("readWKTPoint", (s: String) => parseWktPoint(s))
-    spark.udf.register("readWKTRing", (s: String) => parseWktRing(s): TRing)
-    spark.udf.register("readWKTPolygon", (s: String) => parseWktPolygon(s): TPoly)
-    spark.udf.register("readWKTMultiPolygon", (s: String) => fromMp(parseWktMulti(s)))
+    r.udf("readWKTPoint", udf((s: String) => parseWktPoint(s)))
+    r.udf("readWKTRing", udf((s: String) => parseWktRing(s): TRing))
+    r.udf("readWKTPolygon", udf((s: String) => parseWktPolygon(s): TPoly))
+    r.udf("readWKTMultiPolygon", udf((s: String) => fromMp(parseWktMulti(s))))
 
-    spark.udf.register("wkt", (m: TMulti) => wktMulti(mp(m)))
-    spark.udf.register("wktPoint", (p: TP) => wktPoint(p))
-    spark.udf.register("wktRing", (r: TRing) => wktRing(r.toIndexedSeq))
-    spark.udf.register("wktPolygon", (p: TPoly) =>
-      wktPolygon(p.map(_.toIndexedSeq).toIndexedSeq))
+    r.udf("wkt", udf((m: TMulti) => wktMulti(mp(m))))
+    r.udf("wktPoint", udf((p: TP) => wktPoint(p)))
+    r.udf("wktRing", udf((r: TRing) => wktRing(r.toIndexedSeq)))
+    r.udf("wktPolygon", udf((p: TPoly) =>
+      wktPolygon(p.map(_.toIndexedSeq).toIndexedSeq)))
 
-    spark.udf.register("svg", (m: TMulti, style: String) =>
-      svgMulti(mp(m), if (style == null) "" else style))
-    spark.udf.register("svgPoint", (p: TP, style: String) =>
-      svgPoint(p, if (style == null) "" else style))
-    spark.udf.register("svgRing", (r: TRing, style: String) =>
-      svgRing(r.toIndexedSeq, if (style == null) "" else style))
-    spark.udf.register("svgPolygon", (p: TPoly, style: String) =>
-      svgPolygon(p.map(_.toIndexedSeq).toIndexedSeq, if (style == null) "" else style))
+    r.udf("svg", udf((m: TMulti, style: String) =>
+      svgMulti(mp(m), if (style == null) "" else style)))
+    r.udf("svgPoint", udf((p: TP, style: String) =>
+      svgPoint(p, if (style == null) "" else style)))
+    r.udf("svgRing", udf((r: TRing, style: String) =>
+      svgRing(r.toIndexedSeq, if (style == null) "" else style)))
+    r.udf("svgPolygon", udf((p: TPoly, style: String) =>
+      svgPolygon(p.map(_.toIndexedSeq).toIndexedSeq, if (style == null) "" else style)))
 
-    spark.udf.register("polygonAreaCartesian", (m: TMulti) =>
+    r.udf("polygonAreaCartesian", udf((m: TMulti) =>
       if (m == null || m.isEmpty) null.asInstanceOf[java.lang.Double]
-      else java.lang.Double.valueOf(areaCartesian(mp(m))))
-    spark.udf.register("polygonPerimeterCartesian", (m: TMulti) =>
+      else java.lang.Double.valueOf(areaCartesian(mp(m)))))
+    r.udf("polygonPerimeterCartesian", udf((m: TMulti) =>
       if (m == null || m.isEmpty) null.asInstanceOf[java.lang.Double]
-      else java.lang.Double.valueOf(perimeterCartesian(mp(m))))
-    spark.udf.register("polygonConvexHullCartesian", (m: TMulti) =>
-      convexHull(mp(m)).map(r => r: Seq[TP]): TPoly)
-    spark.udf.register("polygonsDistanceCartesian", (a: TMulti, b: TMulti) =>
-      distanceCartesian(mp(a), mp(b)))
-    spark.udf.register("polygonsEqualsCartesian", (a: TMulti, b: TMulti) =>
-      equalsCartesian(mp(a), mp(b)))
-    spark.udf.register("polygonsWithinCartesian", (a: TMulti, b: TMulti) =>
-      withinCartesian(mp(a), mp(b)))
-    spark.udf.register("polygonsIntersectionCartesian", (a: TMulti, b: TMulti) =>
-      fromMp(PolygonClip.clip(mp(a), mp(b), PolygonClip.Intersection)))
-    spark.udf.register("polygonsUnionCartesian", (a: TMulti, b: TMulti) =>
-      fromMp(PolygonClip.clip(mp(a), mp(b), PolygonClip.Union)))
-    spark.udf.register("polygonsSymDifferenceCartesian", (a: TMulti, b: TMulti) =>
-      fromMp(PolygonClip.clip(mp(a), mp(b), PolygonClip.Xor)))
+      else java.lang.Double.valueOf(perimeterCartesian(mp(m)))))
+    r.udf("polygonConvexHullCartesian", udf((m: TMulti) =>
+      convexHull(mp(m)).map(r => r: Seq[TP]): TPoly))
+    r.udf("polygonsDistanceCartesian", udf((a: TMulti, b: TMulti) =>
+      distanceCartesian(mp(a), mp(b))))
+    r.udf("polygonsEqualsCartesian", udf((a: TMulti, b: TMulti) =>
+      equalsCartesian(mp(a), mp(b))))
+    r.udf("polygonsWithinCartesian", udf((a: TMulti, b: TMulti) =>
+      withinCartesian(mp(a), mp(b))))
+    r.udf("polygonsIntersectionCartesian", udf((a: TMulti, b: TMulti) =>
+      fromMp(PolygonClip.clip(mp(a), mp(b), PolygonClip.Intersection))))
+    r.udf("polygonsUnionCartesian", udf((a: TMulti, b: TMulti) =>
+      fromMp(PolygonClip.clip(mp(a), mp(b), PolygonClip.Union))))
+    r.udf("polygonsSymDifferenceCartesian", udf((a: TMulti, b: TMulti) =>
+      fromMp(PolygonClip.clip(mp(a), mp(b), PolygonClip.Xor))))
 
     // spatial-join kernels: exact containment + integer-grid bucketing
     // (points and polygons hash to the same cell ids, so a huge
     // point-in-polygon join becomes an equi-join on cell + exact verify —
     // the 100 TB reverse-geocode shape; see operators/SpatialJoin)
-    spark.udf.register("pointInMultiPolygon", (x: Double, y: Double, m: TMulti) =>
-      pointInMulti((x, y), toMp(m)))
-    spark.udf.register("polygonCoveringCells", (m: TMulti, cell: Double) =>
-      coveringCells(toMp(m), cell))
-    spark.udf.register("pointCell", (x: Double, y: Double, cell: Double) =>
-      cellId(math.floor(x / cell).toLong, math.floor(y / cell).toLong))
+    r.udf("pointInMultiPolygon", udf((x: Double, y: Double, m: TMulti) =>
+      pointInMulti((x, y), toMp(m))))
+    r.udf("polygonCoveringCells", udf((m: TMulti, cell: Double) =>
+      coveringCells(toMp(m), cell)))
+    r.udf("pointCell", udf((x: Double, y: Double, cell: Double) =>
+      cellId(math.floor(x / cell).toLong, math.floor(y / cell).toLong)))
 
-    spark.udf.register("polygonAreaSpherical", (m: TMulti) =>
+    r.udf("polygonAreaSpherical", udf((m: TMulti) =>
       if (m == null || m.isEmpty) null.asInstanceOf[java.lang.Double]
-      else java.lang.Double.valueOf(areaSpherical(mp(m))))
-    spark.udf.register("polygonPerimeterSpherical", (m: TMulti) =>
+      else java.lang.Double.valueOf(areaSpherical(mp(m)))))
+    r.udf("polygonPerimeterSpherical", udf((m: TMulti) =>
       if (m == null || m.isEmpty) null.asInstanceOf[java.lang.Double]
-      else java.lang.Double.valueOf(perimeterSpherical(mp(m))))
-    spark.udf.register("polygonsDistanceSpherical", (a: TMulti, b: TMulti) =>
-      distanceSpherical(mp(a), mp(b)))
-    spark.udf.register("polygonsWithinSpherical", (a: TMulti, b: TMulti) =>
-      withinSpherical(mp(a), mp(b)))
-    spark.udf.register("polygonsIntersectionSpherical", (a: TMulti, b: TMulti) =>
-      fromMp(clipSpherical(mp(a), mp(b), PolygonClip.Intersection)))
-    spark.udf.register("polygonsUnionSpherical", (a: TMulti, b: TMulti) =>
-      fromMp(clipSpherical(mp(a), mp(b), PolygonClip.Union)))
-    spark.udf.register("polygonsSymDifferenceSpherical", (a: TMulti, b: TMulti) =>
-      fromMp(clipSpherical(mp(a), mp(b), PolygonClip.Xor)))
+      else java.lang.Double.valueOf(perimeterSpherical(mp(m)))))
+    r.udf("polygonsDistanceSpherical", udf((a: TMulti, b: TMulti) =>
+      distanceSpherical(mp(a), mp(b))))
+    r.udf("polygonsWithinSpherical", udf((a: TMulti, b: TMulti) =>
+      withinSpherical(mp(a), mp(b))))
+    r.udf("polygonsIntersectionSpherical", udf((a: TMulti, b: TMulti) =>
+      fromMp(clipSpherical(mp(a), mp(b), PolygonClip.Intersection))))
+    r.udf("polygonsUnionSpherical", udf((a: TMulti, b: TMulti) =>
+      fromMp(clipSpherical(mp(a), mp(b), PolygonClip.Union))))
+    r.udf("polygonsSymDifferenceSpherical", udf((a: TMulti, b: TMulti) =>
+      fromMp(clipSpherical(mp(a), mp(b), PolygonClip.Xor))))
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Cast, CreateArray, CreateNamedStruct, EqualTo, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Count, HyperLogLogPlusPlus, Max, Percentile, Sum}
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType}
@@ -256,10 +255,8 @@ object GraftFunctions {
     )
   }
 
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  def register(r: FunctionSurface.Registrar): Unit =
     (scalar ++ aggregates ++ columnAggregates).foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      r.expr(name)(builder)
     }
-  }
 }

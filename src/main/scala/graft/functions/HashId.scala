@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.udf
 
 /** `hashid` — the public hashids algorithm (hashids.org spec; reference
   * `src/Functions/FunctionHashID.h`, gated there behind
@@ -101,8 +101,8 @@ object HashId {
     ret.toString
   }
 
-  def install(spark: SparkSession): Unit = {
-    spark.udf.register("hashidInternal",
+  def register(r: FunctionSurface.Registrar): Unit = {
+    r.udf("hashidInternal", udf(
       (n: java.lang.Long, salt: String, minLen: Int, alphabet: String) => {
         if (n == null) null
         else {
@@ -110,19 +110,15 @@ object HashId {
             "hashid: salt/alphabet must not be NULL") // ref error 43
           encode(n.longValue, salt, minLen, alphabet)
         }
-      })
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
+      }))
     import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hashid"),
-      new ExpressionInfo(getClass.getName, "hashid"),
-      (cs: Seq[Expression]) => {
-        require(cs.nonEmpty && cs.length <= 4,
-          s"hashid(num[, salt[, minLength[, alphabet]]]): got ${cs.length} args")
-        val full = cs ++ Seq(Literal(""), Literal(0),
-          Literal(DefaultAlphabet)).drop(cs.length - 1)
-        UnresolvedFunction("hashidInternal", full, isDistinct = false)
-      })
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    r.expr("hashid") { cs =>
+      require(cs.nonEmpty && cs.length <= 4,
+        s"hashid(num[, salt[, minLength[, alphabet]]]): got ${cs.length} args")
+      val full = cs ++ Seq(Literal(""), Literal(0),
+        Literal(DefaultAlphabet)).drop(cs.length - 1)
+      UnresolvedFunction("hashidInternal", full, isDistinct = false)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.functions.udf
 
 /** Value-exact ports of the reference's non-cryptographic hash surface
   * (`src/Functions/FunctionsHashing.h`). Every function here reproduces
@@ -665,28 +666,28 @@ object HashParity {
     * reference overloads polymorphically; cast non-strings first), plus
     * the two explicit combinators for multi-argument parity.
     */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def register(r: FunctionSurface.Registrar): Unit = {
     @inline def bytes(s: String): Array[Byte] = s.getBytes(UTF_8)
     // Variadic family (cityHash64, sipHash64, xxHash64, murmur*, halfMD5,
     // farm*) — Catalyst expressions with the reference's combinators.
-    ChHash.install(spark)
+    ChHash.register(r)
     // Fixed-shape remainder as plain UDFs.
-    spark.udf.register("sipHash128", (s: String) => hex(sipHash128(bytes(s))))
-    spark.udf.register("sipHash128Keyed",
-      (k0: Long, k1: Long, s: String) => hex(sipHash128(bytes(s), k0, k1)))
-    spark.udf.register("sipHash128Reference",
-      (s: String) => hex(sipHash128Reference(bytes(s))))
-    spark.udf.register("sipHash128ReferenceKeyed",
-      (k0: Long, k1: Long, s: String) => hex(sipHash128Reference(bytes(s), k0, k1)))
-    spark.udf.register("sipHash64Keyed",
-      (k0: Long, k1: Long, s: String) => sipHash64(bytes(s), k0, k1))
-    spark.udf.register("murmurHash3_128", (s: String) => hex(murmurHash3_128(bytes(s))))
-    spark.udf.register("cityHash64Combine", (h1: Long, h2: Long) => hash128to64(h1, h2))
-    spark.udf.register("sipHash64Combine", (h1: Long, h2: Long) => sipHash64Combine(h1, h2))
-    spark.udf.register("javaHash", (s: String) => javaHash(bytes(s)))
-    spark.udf.register("javaHashUTF16LE", (s: String) => javaHashUTF16LE(s))
-    spark.udf.register("hiveHash", (s: String) => hiveHash(bytes(s)))
-    spark.udf.register("intHash64", (x: Long) => intHash64(x))
-    spark.udf.register("intHash32", (x: Long) => intHash32(x))
+    r.udf("sipHash128", udf((s: String) => hex(sipHash128(bytes(s)))))
+    r.udf("sipHash128Keyed", udf(
+      (k0: Long, k1: Long, s: String) => hex(sipHash128(bytes(s), k0, k1))))
+    r.udf("sipHash128Reference", udf(
+      (s: String) => hex(sipHash128Reference(bytes(s)))))
+    r.udf("sipHash128ReferenceKeyed", udf(
+      (k0: Long, k1: Long, s: String) => hex(sipHash128Reference(bytes(s), k0, k1))))
+    r.udf("sipHash64Keyed", udf(
+      (k0: Long, k1: Long, s: String) => sipHash64(bytes(s), k0, k1)))
+    r.udf("murmurHash3_128", udf((s: String) => hex(murmurHash3_128(bytes(s)))))
+    r.udf("cityHash64Combine", udf((h1: Long, h2: Long) => hash128to64(h1, h2)))
+    r.udf("sipHash64Combine", udf((h1: Long, h2: Long) => sipHash64Combine(h1, h2)))
+    r.udf("javaHash", udf((s: String) => javaHash(bytes(s))))
+    r.udf("javaHashUTF16LE", udf((s: String) => javaHashUTF16LE(s)))
+    r.udf("hiveHash", udf((s: String) => hiveHash(bytes(s))))
+    r.udf("intHash64", udf((x: Long) => intHash64(x)))
+    r.udf("intHash32", udf((x: Long) => intHash32(x)))
   }
 }

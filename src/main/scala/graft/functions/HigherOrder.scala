@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
@@ -471,14 +469,9 @@ object HigherOrder {
 
   /** Names whose former SQL-macro definitions this module replaces (the
     * macros pinned ARRAY<DOUBLE>/MAP<STRING,DOUBLE> signatures; the
-    * native builders are generic). ClickHouseCompat.install calls this
-    * AFTER the SQL pass so these builders win the registry.
+    * native builders are generic).
     */
-  def install(spark: SparkSession): Unit = builders.foreach {
-    case (name, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(getClass.getName, name),
-        (children: Seq[Expression]) => builder(children))
+  def register(r: FunctionSurface.Registrar): Unit = builders.foreach {
+    case (name, builder) => r.expr(name)(builder)
   }
 }

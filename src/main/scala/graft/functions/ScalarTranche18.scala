@@ -6,12 +6,13 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.api.java.{UDF1, UDF2, UDF3}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedExtractValue, UnresolvedFunction}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Explode, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Explode, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -479,14 +480,10 @@ object ScalarTranche18 {
   }
 
   // ------------------------------------------------------------------
-  // install
+  // registration
   // ------------------------------------------------------------------
 
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def builder(name: String)(f: Seq[Expression] => Expression): Unit =
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(getClass.getName, name), f)
+  def register(r: FunctionSurface.Registrar): Unit = {
     def call(name: String, args: Seq[Expression]): Expression =
       UnresolvedFunction(name, args, isDistinct = false)
     def constStr(e: Expression, what: String): String = {
@@ -495,45 +492,45 @@ object ScalarTranche18 {
     }
 
     // ---- the row-multiplying front: SELECT arrayJoin(a) == explode
-    builder("arrayJoin")(cs => Explode(cs.head))
+    r.expr("arrayJoin")(cs => Explode(cs.head))
 
     // ---- plan-time introspection
-    builder("isConstant")(cs => TypeIntrospection(cs.head, "isConstant"))
-    builder("isNullable")(cs => TypeIntrospection(cs.head, "isNullable"))
-    builder("defaultValueOfArgumentType")(cs =>
+    r.expr("isConstant")(cs => TypeIntrospection(cs.head, "isConstant"))
+    r.expr("isNullable")(cs => TypeIntrospection(cs.head, "isNullable"))
+    r.expr("defaultValueOfArgumentType")(cs =>
       TypeIntrospection(cs.head, "defaultValue"))
-    builder("defaultValueOfTypeName") { cs =>
+    r.expr("defaultValueOfTypeName") { cs =>
       val (dt, nullable) = graft.sources.ChTypes.toSpark(
         constStr(cs.head, "defaultValueOfTypeName"))
       if (nullable) Literal(null, dt) else Literal.create(zeroOf(dt), dt)
     }
-    builder("getSubcolumn")(cs => UnresolvedExtractValue(cs.head, cs(1)))
+    r.expr("getSubcolumn")(cs => UnresolvedExtractValue(cs.head, cs(1)))
     // indexHint: args drive index analysis only; the result is truthy
     // for every row (the reference returns UInt8 1 — boolean here so a
     // bare `WHERE indexHint(...)` analyzes)
-    builder("indexHint")(_ => Literal(true))
+    r.expr("indexHint")(_ => Literal(true))
     // one random UInt32 per QUERY: the reference's per-block constant
     // collapses to a per-plan literal in a declarative engine
-    builder("randConstant")(_ => Literal(
+    r.expr("randConstant")(_ => Literal(
       java.util.concurrent.ThreadLocalRandom.current().nextLong(1L << 32)))
-    builder("getSetting") { cs =>
+    r.expr("getSetting") { cs =>
       val name = constStr(cs.head, "getSetting name")
-      // resolve against the ACTIVE session at analysis time, not the
-      // session install() captured — cloned/derived sessions see their
-      // own conf, like the reference's per-query settings
+      // resolve against the ACTIVE session at analysis time —
+      // cloned/derived sessions see their own conf, like the
+      // reference's per-query settings
       val v = SparkSession.active.conf.getOption(name).getOrElse(
         throw new IllegalArgumentException(s"Unknown setting '$name'"))
       // settings are typed in the reference; surface ints/bools as such
       scala.util.Try(Literal(v.toLong)).getOrElse(
         if (v == "true" || v == "false") Literal(v.toBoolean) else Literal(v))
     }
-    builder("hasColumnInTable") { cs =>
+    r.expr("hasColumnInTable") { cs =>
       require(cs.length == 3,
         "hasColumnInTable(db, table, column) — remote forms are not supported")
       val db = constStr(cs.head, "database")
       val table = constStr(cs(1), "table")
       val column = constStr(cs(2), "column")
-      val session = SparkSession.active // analysis-time session, not install's
+      val session = SparkSession.active // analysis-time session
       val qualified =
         if (db.isEmpty || db == "default" || db == session.catalog.currentDatabase) table
         else s"$db.$table"
@@ -542,8 +539,8 @@ object ScalarTranche18 {
     }
 
     // ---- aggregate-state scalars
-    builder("finalizeAggregation")(cs => FinalizeAggregation(cs.head))
-    builder("initializeAggregation") { cs =>
+    r.expr("finalizeAggregation")(cs => FinalizeAggregation(cs.head))
+    r.expr("initializeAggregation") { cs =>
       import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, UnresolvedNamedLambdaVariable}
       val name = constStr(cs.head, "initializeAggregation name")
       // Combinator SUFFIX chains parse right-to-left, like the
@@ -577,7 +574,7 @@ object ScalarTranche18 {
     }
     // single-item HLL state, byte-compatible with hll_union_agg /
     // hll_sketch_estimate (same lgK/type as Spark's hll_sketch_agg)
-    spark.udf.register("uniqStateScalar", (x: AnyRef) => {
+    r.udf("uniqStateScalar", udf((x: AnyRef) => {
       val sk = new org.apache.datasketches.hll.HllSketch(
         12, org.apache.datasketches.hll.TgtHllType.HLL_8)
       x match {
@@ -590,37 +587,37 @@ object ScalarTranche18 {
         case other => sk.update(String.valueOf(other))
       }
       sk.toUpdatableByteArray
-    })
+    }))
 
     // ---- tuple utilities
-    builder("nested")(cs => NestedArrays(cs))
-    builder("tupleToNameValuePairs")(cs => TupleToNameValuePairs(cs.head))
-    builder("flattenTuple")(cs => FlattenTuple(cs.head))
+    r.expr("nested")(cs => NestedArrays(cs))
+    r.expr("tupleToNameValuePairs")(cs => TupleToNameValuePairs(cs.head))
+    r.expr("flattenTuple")(cs => FlattenTuple(cs.head))
 
     // ---- ranked enumerates
-    builder("arrayEnumerateUniqRanked")(cs => ArrayEnumerateRanked(cs, dense = false))
-    builder("arrayEnumerateDenseRanked")(cs => ArrayEnumerateRanked(cs, dense = true))
+    r.expr("arrayEnumerateUniqRanked")(cs => ArrayEnumerateRanked(cs, dense = false))
+    r.expr("arrayEnumerateDenseRanked")(cs => ArrayEnumerateRanked(cs, dense = true))
 
     // ---- file read (src/Functions/file.cpp): String contents; the
     // 2-arg form returns the default when the file is missing
-    spark.udf.register("fileReadStrict", (path: String) =>
+    r.udf("fileReadStrict", udf((path: String) =>
       if (path == null) null
       else new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), StandardCharsets.UTF_8))
-    spark.udf.register("fileReadOrDefault", (path: String, dflt: String) =>
+        java.nio.file.Paths.get(path)), StandardCharsets.UTF_8)))
+    r.udf("fileReadOrDefault", udf((path: String, dflt: String) =>
       if (path == null) null
       else try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), StandardCharsets.UTF_8)
-      catch { case _: java.io.IOException => dflt })
-    builder("file") { cs =>
+      catch { case _: java.io.IOException => dflt }))
+    r.expr("file") { cs =>
       if (cs.length <= 1) call("fileReadStrict", cs)
       else call("fileReadOrDefault", cs.take(2))
     }
 
     // ---- decimal overflow probe
-    spark.udf.register("isDecimalOverflow2Internal",
-      (x: AnyRef, p: Int) => isDecimalOverflow(x, p))
-    builder("isDecimalOverflow") { cs =>
+    r.udf("isDecimalOverflow2Internal", udf(
+      (x: AnyRef, p: Int) => isDecimalOverflow(x, p)))
+    r.expr("isDecimalOverflow") { cs =>
       val full = if (cs.length == 1) cs :+ Literal(-1) else cs
       call("isDecimalOverflow2Internal", full)
     }
@@ -628,18 +625,18 @@ object ScalarTranche18 {
     // ---- wide tails
     Seq(WideInt.Int128, WideInt.UInt128, WideInt.Int256, WideInt.UInt256)
       .foreach { k =>
-        spark.udf.register(s"reinterpretAs${k.name}",
-          (x: AnyRef) => if (x == null) null else reinterpretWide(x, k),
-          BinaryType)
-        spark.udf.register(s"to${k.name}OrDefault",
-          (x: AnyRef, d: AnyRef) => {
+        r.udf(s"reinterpretAs${k.name}", udf(
+          ((x: AnyRef) => if (x == null) null else reinterpretWide(x, k)): UDF1[AnyRef, Any],
+          BinaryType))
+        r.udf(s"to${k.name}OrDefault", udf(
+          ((x: AnyRef, d: AnyRef) => {
             if (x == null) { if (d == null) null else WideInt.convert(d, k) }
             else Option(WideInt.tryConvert(x, k)).getOrElse(
               if (d == null) null else WideInt.convert(d, k))
-          }, BinaryType)
+          }): UDF2[AnyRef, AnyRef, Any], BinaryType))
       }
-    spark.udf.register("toDecimal256OrDefault",
-      (x: AnyRef, s: AnyRef, d: AnyRef) => {
+    r.udf("toDecimal256OrDefault", udf(
+      ((x: AnyRef, s: AnyRef, d: AnyRef) => {
         if (s == null) null
         else {
           val scale = WideInt.operand(s)._1.intValueExact
@@ -647,6 +644,6 @@ object ScalarTranche18 {
           else Option(WideDecimal.tryConvert(x, scale)).getOrElse(
             if (d == null) null else WideDecimal.convert(d, scale))
         }
-      }, BinaryType)
+      }): UDF3[AnyRef, AnyRef, AnyRef, Any], BinaryType))
   }
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.functions.udf
 
 /** Scalar tranche 19 — the block-order family and the last cheap
   * residuals:
@@ -40,14 +39,9 @@ object ScalarTranche19 {
     WindowSpecDefinition(Nil,
       SortOrder(MonotonicallyIncreasingID(), Ascending) :: Nil, frame)
 
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def builder(name: String)(f: Seq[Expression] => Expression): Unit =
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(getClass.getName, name), f)
-
-    FuzzyRegex.install(spark)
-    HashId.install(spark)
+  def register(r: FunctionSurface.Registrar): Unit = {
+    FuzzyRegex.register(r)
+    HashId.register(r)
 
     // neighbor(col, offset[, default]): value at layout-row + offset;
     // outside the relation -> explicit default, else the NON-null type
@@ -55,7 +49,7 @@ object ScalarTranche19 {
     // reference's Nullable TYPE — a parquet Int64 is still Int64, so
     // its default is 0; pass an explicit NULL default for Nullable
     // semantics.
-    builder("neighbor") { cs =>
+    r.expr("neighbor") { cs =>
       require(cs.length == 2 || cs.length == 3,
         s"neighbor(column, offset[, default]): got ${cs.length} arguments")
       val off = cs(1) match {
@@ -78,14 +72,14 @@ object ScalarTranche19 {
     def lagNonNull(c: Expression): Expression =
       WindowExpression(Lag(c, Literal(1), Literal(null), ignoreNulls = true),
         layoutSpec(UnspecifiedFrame))
-    builder("runningDifference") { cs =>
+    r.expr("runningDifference") { cs =>
       val prev = lagNonNull(cs.head)
       If(IsNull(cs.head), Literal.create(null, org.apache.spark.sql.types.NullType),
         If(IsNull(prev),
           ScalarTranche18.TypeIntrospection(cs.head, "zeroValue"),
           Subtract(cs.head, prev)))
     }
-    builder("runningDifferenceStartingWithFirstValue") { cs =>
+    r.expr("runningDifferenceStartingWithFirstValue") { cs =>
       val prev = lagNonNull(cs.head)
       If(IsNull(cs.head), Literal.create(null, org.apache.spark.sql.types.NullType),
         If(IsNull(prev), cs.head, Subtract(cs.head, prev)))
@@ -94,13 +88,13 @@ object ScalarTranche19 {
     // runningAccumulate(state): running fold of a -State column. The
     // engine's scalar states (sumState/countState) fold by SUM — the
     // running prefix aggregate in layout order.
-    builder("runningAccumulate") { cs =>
+    r.expr("runningAccumulate") { cs =>
       WindowExpression(Sum(cs.head).toAggregateExpression(),
         layoutSpec(SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow)))
     }
 
     // replicate(x, arr) -> transform(arr, _ -> x)
-    builder("replicate") { cs =>
+    r.expr("replicate") { cs =>
       val v = UnresolvedNamedLambdaVariable(Seq("__replicate_elem"))
       UnresolvedFunction("transform",
         Seq(cs(1), LambdaFunction(cs.head, Seq(v))), isDistinct = false)
@@ -109,7 +103,7 @@ object ScalarTranche19 {
     // fuzzBits(s, prob): independent per-bit flips (ISO-8859-1 carries
     // bytes byte-faithfully through the String surface, like the
     // reinterpret family)
-    spark.udf.register("fuzzBits", (s: String, p: Double) => {
+    r.udf("fuzzBits", udf((s: String, p: Double) => {
       if (s == null) null
       else {
         require(p >= 0.0 && p <= 1.0, s"fuzzBits: probability $p out of [0,1]")
@@ -126,23 +120,23 @@ object ScalarTranche19 {
         }
         new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
       }
-    })
+    }))
 
     // the non-throwing front IS our detectLanguage (it already returns
     // 'un' for undetectable input) — alias by expansion
-    builder("detectLanguageUnknown")(cs =>
+    r.expr("detectLanguageUnknown")(cs =>
       UnresolvedFunction("detectLanguage", cs, isDistinct = false))
 
     // tid (src/Functions/serverConstants.cpp family): the executing
     // thread's id — per-task introspection, like blockNumber
-    spark.udf.register("tid", () => Thread.currentThread().getId)
+    r.udf("tid", udf(() => Thread.currentThread().getId))
 
     // caseWithExpression(x, w1, r1, ..., [else]) — the parser-internal
     // form of CASE x WHEN; Catalyst has the exact twin. `caseWithExpr`
     // is the reference's second registered spelling
     // (caseWithExpression.cpp:113; round-20 extraction reconciliation).
-    builder("caseWithExpression")(cs => CaseKeyWhen(cs.head, cs.tail))
-    builder("caseWithExpr")(cs => CaseKeyWhen(cs.head, cs.tail))
+    r.expr("caseWithExpression")(cs => CaseKeyWhen(cs.head, cs.tail))
+    r.expr("caseWithExpr")(cs => CaseKeyWhen(cs.head, cs.tail))
 
     // caseWithoutExpr[ession](c1, v1, c2, v2, ..., [else]) — the
     // parser-internal CASE WHEN spellings, registered as aliases of the
@@ -158,7 +152,7 @@ object ScalarTranche19 {
       CaseWhen(cs.init.grouped(2).map { case Seq(c, v) => (c, v) }.toSeq,
         Some(cs.last))
     }
-    builder("caseWithoutExpr")(caseWithout)
-    builder("caseWithoutExpression")(caseWithout)
+    r.expr("caseWithoutExpr")(caseWithout)
+    r.expr("caseWithoutExpression")(caseWithout)
   }
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types.BooleanType
@@ -154,29 +152,24 @@ object ScalarTranche20 {
     else If(IsNull(cs.head), Literal.create(null, BooleanType), Literal(false))
   }
 
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def builder(name: String)(f: Seq[Expression] => Expression): Unit =
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(getClass.getName, name), f)
-
+  def register(r: FunctionSurface.Registrar): Unit = {
     for (global <- Seq(false, true)) {
       val g = if (global) "global" else ""
       def n(s: String) = if (global) s.capitalize else s
       if (global)
-        builder("globalIn")(cs => inExpr(cs, negative = false, nullAware = false))
+        r.expr("globalIn")(cs => inExpr(cs, negative = false, nullAware = false))
       else
-        builder("in")(builtinCompatibleIn)
-      builder(s"$g${n("notIn")}")(cs => inExpr(cs, negative = true, nullAware = false))
-      builder(s"$g${n("nullIn")}")(cs => inExpr(cs, negative = false, nullAware = true))
-      builder(s"$g${n("notNullIn")}")(cs => inExpr(cs, negative = true, nullAware = true))
-      builder(s"$g${n("inIgnoreSet")}")(cs => ignoreSetExpr(cs, nullAware = false))
-      builder(s"$g${n("notInIgnoreSet")}")(cs => ignoreSetExpr(cs, nullAware = false))
-      builder(s"$g${n("nullInIgnoreSet")}")(cs => ignoreSetExpr(cs, nullAware = true))
-      builder(s"$g${n("notNullInIgnoreSet")}")(cs => ignoreSetExpr(cs, nullAware = true))
+        r.expr("in")(builtinCompatibleIn)
+      r.expr(s"$g${n("notIn")}")(cs => inExpr(cs, negative = true, nullAware = false))
+      r.expr(s"$g${n("nullIn")}")(cs => inExpr(cs, negative = false, nullAware = true))
+      r.expr(s"$g${n("notNullIn")}")(cs => inExpr(cs, negative = true, nullAware = true))
+      r.expr(s"$g${n("inIgnoreSet")}")(cs => ignoreSetExpr(cs, nullAware = false))
+      r.expr(s"$g${n("notInIgnoreSet")}")(cs => ignoreSetExpr(cs, nullAware = false))
+      r.expr(s"$g${n("nullInIgnoreSet")}")(cs => ignoreSetExpr(cs, nullAware = true))
+      r.expr(s"$g${n("notNullInIgnoreSet")}")(cs => ignoreSetExpr(cs, nullAware = true))
     }
 
-    builder("_CAST") { cs =>
+    r.expr("_CAST") { cs =>
       require(cs.length == 2, s"_CAST(x, 'TypeName'): got ${cs.length} arguments")
       require(cs(1).foldable, "_CAST type name must be a constant string")
       val (dt, _) = graft.sources.ChTypes.toSpark(String.valueOf(cs(1).eval(null)))
@@ -204,7 +197,7 @@ object ScalarTranche20 {
         UnresolvedFunction("element_at", Seq(dst, pos), isDistinct = false))),
         Some(miss))
     }
-    builder("transform") { cs =>
+    r.expr("transform") { cs =>
       cs match {
         case Seq(arr, l: LambdaFunction) => ArrayTransform(arr, l)
         case Seq(x, src, dst) => transformLookup(x, src, dst, x)

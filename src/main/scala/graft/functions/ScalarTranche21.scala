@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -153,19 +152,15 @@ object ScalarTranche21 {
     "version_comment" -> "",
     "transaction_isolation" -> "READ-UNCOMMITTED")
 
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def builder(name: String)(f: Seq[Expression] => Expression): Unit =
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(getClass.getName, name), f)
+  def register(r: FunctionSurface.Registrar): Unit = {
     def constStr(e: Expression, what: String): String = {
       require(e.foldable, s"$what must be a constant string")
       String.valueOf(e.eval(null))
     }
 
-    builder("validateNestedArraySizes")(cs => ValidateNestedArraySizes(cs))
+    r.expr("validateNestedArraySizes")(cs => ValidateNestedArraySizes(cs))
 
-    builder("globalVariable") { cs =>
+    r.expr("globalVariable") { cs =>
       require(cs.length == 1, "globalVariable(name)")
       globalVariables.get(constStr(cs.head, "globalVariable name")
           .toLowerCase(java.util.Locale.ROOT)) match {
@@ -176,7 +171,7 @@ object ScalarTranche21 {
       }
     }
 
-    builder("getMacro") { cs =>
+    r.expr("getMacro") { cs =>
       require(cs.length == 1, "getMacro(name)")
       val name = constStr(cs.head, "getMacro name")
       GetMacroExpr(name,
@@ -184,12 +179,12 @@ object ScalarTranche21 {
           .orElse(SparkSession.active.conf.getOption(s"spark.graft.macros.$name")))
     }
 
-    builder("logTrace") { cs =>
+    r.expr("logTrace") { cs =>
       require(cs.length == 1, "logTrace(message)")
       LogTraceExpr(cs.head)
     }
 
-    builder("buildId") { _ =>
+    r.expr("buildId") { _ =>
       Literal(UTF8String.fromString(s"spark-${org.apache.spark.SPARK_VERSION}"),
         org.apache.spark.sql.types.StringType)
     }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.udf
 
 /** Value-exact port of the reference's ngram/wordShingle SimHash/MinHash
   * scalar family (`/root/reference/src/Functions/FunctionsStringHash.{h,cpp}`,
@@ -285,22 +285,22 @@ object StringSketchHash {
     * (s, shingleSize, numHashes) — pass the reference defaults (3, 6)
     * for the 1-argument behavior.
     */
-  def install(spark: SparkSession): Unit = {
+  def register(r: FunctionSurface.Registrar): Unit = {
     val grid = Seq(
       ("ngram", false), ("wordShingle", true))
     for ((prefix, word) <- grid; (suffix, ci, utf8) <- Seq(
         ("", false, false), ("CaseInsensitive", true, false),
         ("UTF8", false, true), ("CaseInsensitiveUTF8", true, true))) {
-      spark.udf.register(s"${prefix}SimHash$suffix", (s: String, sh: Int) =>
+      r.udf(s"${prefix}SimHash$suffix", udf((s: String, sh: Int) =>
         if (s == null) null.asInstanceOf[java.lang.Long]
         else java.lang.Long.valueOf(
           if (word) wordShingleSimHash(s, sh, ci)
-          else ngramSimHash(s, sh, ci, utf8)))
-      spark.udf.register(s"${prefix}MinHash$suffix", (s: String, sh: Int, k: Int) =>
-        if (s == null) null else minHash(s, sh, k, ci, utf8, word))
-      spark.udf.register(s"${prefix}MinHashArg$suffix",
+          else ngramSimHash(s, sh, ci, utf8))))
+      r.udf(s"${prefix}MinHash$suffix", udf((s: String, sh: Int, k: Int) =>
+        if (s == null) null else minHash(s, sh, k, ci, utf8, word)))
+      r.udf(s"${prefix}MinHashArg$suffix", udf(
         (s: String, sh: Int, k: Int) =>
-          if (s == null) null else minHashArg(s, sh, k, ci, utf8, word))
+          if (s == null) null else minHashArg(s, sh, k, ci, utf8, word)))
     }
   }
 }

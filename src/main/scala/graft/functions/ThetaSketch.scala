@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.udf
 
 /** KMV theta sketch — the published k-minimum-values distinct-count
   * sketch with set algebra (Beyer et al. 2007; the DataSketches theta
@@ -110,21 +111,21 @@ object ThetaSketch extends Serializable {
     def outputEncoder: Encoder[State] = Encoders.product[State]
   }
 
-  def install(spark: SparkSession): Unit = {
-    spark.udf.register("uniqThetaSketch",
+  def register(r: FunctionSurface.Registrar): Unit = {
+    r.udf("uniqThetaSketch",
       org.apache.spark.sql.functions.udaf(new ThetaAgg(DefaultK)))
-    spark.udf.register("uniqThetaEstimate",
+    r.udf("uniqThetaEstimate", udf(
       (theta: Double, hashes: Seq[Long]) =>
-        estimate(State(theta, hashes.toArray)))
+        estimate(State(theta, hashes.toArray))))
     def st(t: Double, hs: Seq[Long]) = State(t, hs.toArray)
-    spark.udf.register("uniqThetaUnion",
+    r.udf("uniqThetaUnion", udf(
       (t1: Double, h1: Seq[Long], t2: Double, h2: Seq[Long]) =>
-        union(st(t1, h1), st(t2, h2)))
-    spark.udf.register("uniqThetaIntersect",
+        union(st(t1, h1), st(t2, h2))))
+    r.udf("uniqThetaIntersect", udf(
       (t1: Double, h1: Seq[Long], t2: Double, h2: Seq[Long]) =>
-        intersect(st(t1, h1), st(t2, h2)))
-    spark.udf.register("uniqThetaNot",
+        intersect(st(t1, h1), st(t2, h2))))
+    r.udf("uniqThetaNot", udf(
       (t1: Double, h1: Seq[Long], t2: Double, h2: Seq[Long]) =>
-        aNotB(st(t1, h1), st(t2, h2)))
+        aNotB(st(t1, h1), st(t2, h2))))
   }
 }

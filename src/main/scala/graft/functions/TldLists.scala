@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.udf
 
 /** Named custom TLD lists + the reference's `*Custom` subdomain family
   * (`src/Functions/URL/firstSignificantSubdomainCustom.cpp`,
@@ -85,18 +85,18 @@ object TldLists {
     else s"$sig.$suffix"
   }
 
-  def install(spark: SparkSession): Unit = {
-    spark.udf.register("firstSignificantSubdomainCustom",
-      (u: String, l: String) => firstSignificant(u, l))
-    spark.udf.register("firstSignificantSubdomainCustomRFC",
-      (u: String, l: String) => firstSignificant(u, l))
-    spark.udf.register("cutToFirstSignificantSubdomainCustom",
-      (u: String, l: String) => cutToFirstSignificant(u, l, keepWWW = false))
-    spark.udf.register("cutToFirstSignificantSubdomainCustomRFC",
-      (u: String, l: String) => cutToFirstSignificant(u, l, keepWWW = false))
-    spark.udf.register("cutToFirstSignificantSubdomainCustomWithWWW",
-      (u: String, l: String) => cutToFirstSignificant(u, l, keepWWW = true))
-    spark.udf.register("cutToFirstSignificantSubdomainCustomWithWWWRFC",
-      (u: String, l: String) => cutToFirstSignificant(u, l, keepWWW = true))
+  def register(r: FunctionSurface.Registrar): Unit = {
+    r.udf("firstSignificantSubdomainCustom", udf(
+      (u: String, l: String) => firstSignificant(u, l)))
+    r.udf("firstSignificantSubdomainCustomRFC", udf(
+      (u: String, l: String) => firstSignificant(u, l)))
+    r.udf("cutToFirstSignificantSubdomainCustom", udf(
+      (u: String, l: String) => cutToFirstSignificant(u, l, keepWWW = false)))
+    r.udf("cutToFirstSignificantSubdomainCustomRFC", udf(
+      (u: String, l: String) => cutToFirstSignificant(u, l, keepWWW = false)))
+    r.udf("cutToFirstSignificantSubdomainCustomWithWWW", udf(
+      (u: String, l: String) => cutToFirstSignificant(u, l, keepWWW = true)))
+    r.udf("cutToFirstSignificantSubdomainCustomWithWWWRFC", udf(
+      (u: String, l: String) => cutToFirstSignificant(u, l, keepWWW = true)))
   }
 }

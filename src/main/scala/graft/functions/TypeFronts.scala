@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Fronts for the reference's declared types that Spark lacks natively
@@ -141,18 +141,18 @@ object TypeFronts {
   /** Native registrations for the IPv6 front (the UUID/IPv4 fronts are
     * SQL lambdas in [[ClickHouseCompat.definitions]]).
     */
-  def installNative(spark: SparkSession): Unit = {
-    spark.udf.register("toIPv6", (s: String) =>
-      if (s == null) null else ipv6Format(ipv6Parse(s)))
-    spark.udf.register("toIPv6OrNull", (s: String) => toIPv6OrNull(s))
-    spark.udf.register("IPv6StringToNum", (s: String) =>
-      if (s == null) null else ipv6Parse(s))
-    spark.udf.register("IPv6NumToString", (b: Array[Byte]) =>
-      if (b == null) null else ipv6Format(b))
+  def register(r: FunctionSurface.Registrar): Unit = {
+    r.udf("toIPv6", udf((s: String) =>
+      if (s == null) null else ipv6Format(ipv6Parse(s))))
+    r.udf("toIPv6OrNull", udf((s: String) => toIPv6OrNull(s)))
+    r.udf("IPv6StringToNum", udf((s: String) =>
+      if (s == null) null else ipv6Parse(s)))
+    r.udf("IPv6NumToString", udf((b: Array[Byte]) =>
+      if (b == null) null else ipv6Format(b)))
     // cutIPv6 (src/Functions/FunctionsCoding.h): zero the trailing
     // bytesToCutForIPv6 bytes — or, for an IPv4-mapped address
     // (::ffff:a.b.c.d), the trailing bytesToCutForIPv4 bytes.
-    spark.udf.register("cutIPv6", (b: Array[Byte], cutV6: Int, cutV4: Int) =>
+    r.udf("cutIPv6", udf((b: Array[Byte], cutV6: Int, cutV4: Int) =>
       if (b == null || b.length != 16) null
       else {
         val mapped = (0 until 10).forall(b(_) == 0) &&
@@ -162,10 +162,10 @@ object TypeFronts {
         var i = 16 - cut
         while (i < 16) { out(i) = 0; i += 1 }
         ipv6Format(out)
-      })
+      }))
     // IPv6CIDRToRange (FunctionIPv6CIDRToRange): lower/upper bound of the
     // prefix as formatted addresses.
-    spark.udf.register("IPv6CIDRToRange", (b: Array[Byte], prefix: Int) =>
+    r.udf("IPv6CIDRToRange", udf((b: Array[Byte], prefix: Int) =>
       if (b == null || b.length != 16) null
       else {
         val p = math.max(0, math.min(128, prefix))
@@ -179,6 +179,6 @@ object TypeFronts {
           i += 1
         }
         (ipv6Format(lo), ipv6Format(hi))
-      })
+      }))
   }
 }

@@ -2,9 +2,9 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.api.java.{UDF1, UDF2}
 import org.apache.spark.sql.types.{BinaryType, StringType}
+import org.apache.spark.sql.functions.udf
 
 /** Decimal256 — the reference's 256-bit scaled decimal
   * (`src/DataTypes/DataTypeFactory.cpp:270-293`, precision up to 76
@@ -173,21 +173,20 @@ object WideDecimal {
       override def call(a: AnyRef, b: AnyRef): R = f(a, b)
     }
 
-  def install(spark: SparkSession): Unit = {
-    val udfs = spark.udf
+  def register(r: FunctionSurface.Registrar): Unit = {
     def ns1[R >: Null](f: AnyRef => R): AnyRef => R =
       x => if (x == null) null else f(x)
     def ns2[R >: Null](f: (AnyRef, AnyRef) => R): (AnyRef, AnyRef) => R =
       (a, b) => if (a == null || b == null) null else f(a, b)
 
-    udfs.register("toDecimal256", u2(ns2 { (x, s) =>
+    r.udf("toDecimal256", udf(u2(ns2 { (x, s) =>
       convert(x, operand(s).toBigDecimal.intValueExact)
-    }), BinaryType)
-    udfs.register("toDecimal256OrNull", u2 { (x: AnyRef, s: AnyRef) =>
+    }), BinaryType))
+    r.udf("toDecimal256OrNull", udf(u2 { (x: AnyRef, s: AnyRef) =>
       if (x == null || s == null) null
       else tryConvert(x, operand(s).toBigDecimal.intValueExact)
-    }, BinaryType)
-    udfs.register("toDecimal256OrZero", u2 { (x: AnyRef, s: AnyRef) =>
+    }, BinaryType))
+    r.udf("toDecimal256OrZero", udf(u2 { (x: AnyRef, s: AnyRef) =>
       if (s == null) null
       else {
         val scale = operand(s).toBigDecimal.intValueExact
@@ -195,7 +194,7 @@ object WideDecimal {
         else Option(tryConvert(x, scale))
           .getOrElse(encode(Dec(BigInteger.ZERO, scale)))
       }
-    }, BinaryType)
+    }, BinaryType))
 
     def addLike(sign: Int): (AnyRef, AnyRef) => Array[Byte] = (a, b) => {
       val da = operand(a); val db = operand(b)
@@ -203,30 +202,30 @@ object WideDecimal {
       encode(Dec(rescale(da, scale).add(
         rescale(db, scale).multiply(BigInteger.valueOf(sign.toLong))), scale))
     }
-    udfs.register("wideDecPlus", u2(ns2(addLike(1))), BinaryType)
-    udfs.register("wideDecMinus", u2(ns2(addLike(-1))), BinaryType)
-    udfs.register("wideDecMultiply", u2(ns2 { (a, b) =>
+    r.udf("wideDecPlus", udf(u2(ns2(addLike(1))), BinaryType))
+    r.udf("wideDecMinus", udf(u2(ns2(addLike(-1))), BinaryType))
+    r.udf("wideDecMultiply", udf(u2(ns2 { (a, b) =>
       val da = operand(a); val db = operand(b)
       encode(Dec(da.unscaled.multiply(db.unscaled), da.scale + db.scale))
-    }), BinaryType)
+    }), BinaryType))
     // division keeps the FIRST operand's scale, truncating toward zero —
     // the reference's DecimalBinaryOperation rule
-    udfs.register("wideDecDivide", u2(ns2 { (a, b) =>
+    r.udf("wideDecDivide", udf(u2(ns2 { (a, b) =>
       val da = operand(a); val db = operand(b)
       require(db.unscaled.signum != 0, "Decimal division by zero")
       val num = da.unscaled.multiply(BigInteger.TEN.pow(db.scale))
       encode(Dec(num.divide(db.unscaled), da.scale))
-    }), BinaryType)
-    udfs.register("wideDecNegate", u1(ns1 { x =>
+    }), BinaryType))
+    r.udf("wideDecNegate", udf(u1(ns1 { x =>
       val d = operand(x); encode(Dec(d.unscaled.negate, d.scale))
-    }), BinaryType)
-    udfs.register("wideDecAbs", u1(ns1 { x =>
+    }), BinaryType))
+    r.udf("wideDecAbs", udf(u1(ns1 { x =>
       val d = operand(x); encode(Dec(d.unscaled.abs, d.scale))
-    }), BinaryType)
-    udfs.register("wideDecToString",
-      u1(ns1(x => toText(decode(x.asInstanceOf[Array[Byte]])))), StringType)
-    udfs.register("wideDecScale", u1(ns1 { x =>
+    }), BinaryType))
+    r.udf("wideDecToString", udf(
+      u1(ns1(x => toText(decode(x.asInstanceOf[Array[Byte]])))), StringType))
+    r.udf("wideDecScale", udf(u1(ns1 { x =>
       java.lang.Integer.valueOf(decode(x.asInstanceOf[Array[Byte]]).scale)
-    }), org.apache.spark.sql.types.IntegerType)
+    }), org.apache.spark.sql.types.IntegerType))
   }
 }

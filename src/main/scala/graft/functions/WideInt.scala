@@ -2,9 +2,9 @@ package graft.functions
 
 import java.math.BigInteger
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.api.java.{UDF1, UDF2}
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.functions.udf
 
 /** Int128 / UInt128 / Int256 / UInt256 — the reference's wide-integer
   * types (`src/DataTypes/DataTypeFactory.cpp:270-293`,
@@ -182,8 +182,7 @@ object WideInt {
       override def call(a: AnyRef, b: AnyRef): R = f(a, b)
     }
 
-  def install(spark: SparkSession): Unit = {
-    val udfs = spark.udf
+  def register(r: FunctionSurface.Registrar): Unit = {
     def nullSafe1[R >: Null](f: AnyRef => R): AnyRef => R =
       x => if (x == null) null else f(x)
     def nullSafe2[R >: Null](f: (AnyRef, AnyRef) => R): (AnyRef, AnyRef) => R =
@@ -195,25 +194,25 @@ object WideInt {
     // values the non-Or variant accepts); only an unparsable STRING is
     // the null/zero case, matching the reference's parse-failure contract
     Seq(Int128, UInt128, Int256, UInt256).foreach { k =>
-      udfs.register(s"to${k.name}", u1(nullSafe1(convert(_, k))), BinaryType)
-      udfs.register(s"to${k.name}OrNull",
-        u1(nullSafe1(tryConvert(_, k))), BinaryType)
-      udfs.register(s"to${k.name}OrZero",
+      r.udf(s"to${k.name}", udf(u1(nullSafe1(convert(_, k))), BinaryType))
+      r.udf(s"to${k.name}OrNull", udf(
+        u1(nullSafe1(tryConvert(_, k))), BinaryType))
+      r.udf(s"to${k.name}OrZero", udf(
         u1 { x: AnyRef =>
           if (x == null) encode(BigInteger.ZERO, k)
           else Option(tryConvert(x, k)).getOrElse(encode(BigInteger.ZERO, k))
-        }, BinaryType)
+        }, BinaryType))
     }
 
-    udfs.register("widePlus", u2(nullSafe2(binop(_, _)(_.add(_)))), BinaryType)
-    udfs.register("wideMinus",
-      u2(nullSafe2(binop(_, _)(_.subtract(_)))), BinaryType)
-    udfs.register("wideMultiply",
-      u2(nullSafe2(binop(_, _)(_.multiply(_)))), BinaryType)
+    r.udf("widePlus", udf(u2(nullSafe2(binop(_, _)(_.add(_)))), BinaryType))
+    r.udf("wideMinus", udf(
+      u2(nullSafe2(binop(_, _)(_.subtract(_)))), BinaryType))
+    r.udf("wideMultiply", udf(
+      u2(nullSafe2(binop(_, _)(_.multiply(_)))), BinaryType))
     // `/` on wide ints is Float64 in the reference (01440 golden), so a
     // zero divisor follows IEEE double division: ±inf by the sign of the
     // dividend, NaN for 0/0 — never an exception.
-    udfs.register("wideDivide", u2(nullSafe2 { (a, b) =>
+    r.udf("wideDivide", udf(u2(nullSafe2 { (a, b) =>
       val va = operand(a)._1; val vb = operand(b)._1
       java.lang.Double.valueOf(
         if (vb.signum == 0) {
@@ -223,16 +222,16 @@ object WideInt {
         } else new java.math.BigDecimal(va)
           .divide(new java.math.BigDecimal(vb), java.math.MathContext.DECIMAL64)
           .doubleValue)
-    }), DoubleType)
-    udfs.register("wideIntDiv", u2(nullSafe2(binop(_, _) { (a, b) =>
+    }), DoubleType))
+    r.udf("wideIntDiv", udf(u2(nullSafe2(binop(_, _) { (a, b) =>
       require(b.signum != 0, "wide intDiv by zero")
       a.divide(b) // BigInteger.divide truncates toward zero, like the ref
-    })), BinaryType)
-    udfs.register("wideModulo", u2(nullSafe2(binop(_, _) { (a, b) =>
+    })), BinaryType))
+    r.udf("wideModulo", udf(u2(nullSafe2(binop(_, _) { (a, b) =>
       require(b.signum != 0, "wide modulo by zero")
       a.remainder(b) // sign of the dividend — C semantics
-    })), BinaryType)
-    udfs.register("wideNegate", u1(nullSafe1 { x =>
+    })), BinaryType))
+    r.udf("wideNegate", udf(u1(nullSafe1 { x =>
       val (v, k0) = operand(x)
       // negate of an unsigned kind yields the signed kind of the same
       // width (the reference: -toUInt256(1) is Int256 -1).
@@ -242,19 +241,19 @@ object WideInt {
         case s       => s
       }
       encode(v.negate, k)
-    }), BinaryType)
-    udfs.register("wideAbs", u1(nullSafe1 { x =>
+    }), BinaryType))
+    r.udf("wideAbs", udf(u1(nullSafe1 { x =>
       val (v, k0) = operand(x)
       encode(v.abs, k0.getOrElse(Int128))
-    }), BinaryType)
-    udfs.register("wideBitShiftLeft", u2(nullSafe2 { (a, b) =>
+    }), BinaryType))
+    r.udf("wideBitShiftLeft", udf(u2(nullSafe2 { (a, b) =>
       val (v, k0) = operand(a)
       val k = k0.getOrElse(Int128)
       val n = operand(b)._1.intValueExact
       require(n >= 0 && n <= 1024, s"shift amount $n out of range")
       encode(v.shiftLeft(n), k)
-    }), BinaryType)
-    udfs.register("wideBitShiftRight", u2(nullSafe2 { (a, b) =>
+    }), BinaryType))
+    r.udf("wideBitShiftRight", udf(u2(nullSafe2 { (a, b) =>
       val (v, k0) = operand(a)
       val k = k0.getOrElse(Int128)
       val n = operand(b)._1.intValueExact
@@ -262,29 +261,29 @@ object WideInt {
       // BigInteger.shiftRight is arithmetic; unsigned values are
       // non-negative here so it degenerates to a logical shift for them.
       encode(v.shiftRight(n), k)
-    }), BinaryType)
-    udfs.register("wideLeast", u2(nullSafe2 { (a, b) =>
+    }), BinaryType))
+    r.udf("wideLeast", udf(u2(nullSafe2 { (a, b) =>
       val (va, ka) = operand(a); val (vb, kb) = operand(b)
       encode(va.min(vb), promote(ka, kb))
-    }), BinaryType)
-    udfs.register("wideGreatest", u2(nullSafe2 { (a, b) =>
+    }), BinaryType))
+    r.udf("wideGreatest", udf(u2(nullSafe2 { (a, b) =>
       val (va, ka) = operand(a); val (vb, kb) = operand(b)
       encode(va.max(vb), promote(ka, kb))
-    }), BinaryType)
-    udfs.register("wideToString",
+    }), BinaryType))
+    r.udf("wideToString", udf(
       u1(nullSafe1(x => decode(x.asInstanceOf[Array[Byte]])._1.toString)),
-      StringType)
-    udfs.register("wideTypeName",
+      StringType))
+    r.udf("wideTypeName", udf(
       u1(nullSafe1(x => decode(x.asInstanceOf[Array[Byte]])._2.name)),
-      StringType)
-    udfs.register("wideToInt64", u1(nullSafe1 { x =>
+      StringType))
+    r.udf("wideToInt64", udf(u1(nullSafe1 { x =>
       val (v, _) = decode(x.asInstanceOf[Array[Byte]])
       java.lang.Long.valueOf(v.longValue) // low 64 bits, C-style wrap
-    }), LongType)
-    udfs.register("wideToFloat64", u1(nullSafe1 { x =>
+    }), LongType))
+    r.udf("wideToFloat64", udf(u1(nullSafe1 { x =>
       val (v, _) = decode(x.asInstanceOf[Array[Byte]])
       java.lang.Double.valueOf(v.doubleValue)
-    }), DoubleType)
+    }), DoubleType))
 
     // sum over a wide column — result keeps the (promoted) input kind and
     // wraps mod 2^width like every other wide op (the reference:
@@ -292,7 +291,7 @@ object WideInt {
     // contract; the reference returns 0 — callers coalesce if they need
     // that). Wrapping eagerly per step is sound: x ↦ x mod 2^bits is a
     // ring homomorphism, so partial/merge order cannot change the result.
-    udfs.register("wideSum", org.apache.spark.sql.functions.udaf(WideSumAgg))
+    r.udf("wideSum", org.apache.spark.sql.functions.udaf(WideSumAgg))
   }
 }
 

@@ -126,8 +126,8 @@ object Connections {
     * visible in the catalog (`system.functions` in the reference test)
     * and usable from pure SQL.
     */
-  def installNative(spark: SparkSession): Unit =
-    spark.udf.register("getObject", (connectionName: String, url: String) => {
+  def register(r: graft.functions.FunctionSurface.Registrar): Unit =
+    r.udf("getObject", udf((connectionName: String, url: String) => {
       if (url == null) null
       else {
         val conn = registry.getOrElse(connectionName,
@@ -135,7 +135,7 @@ object Connections {
             s"unknown connection $connectionName"))
         fetchValidated(conn, url)
       }
-    })
+    }))
 
   /** Byte cap on a fetched http(s) object (64 MiB): a runaway payload
     * errors out instead of ballooning an executor's heap — the cap is

@@ -1341,9 +1341,12 @@ object Dedup {
     df.sparkSession.conf.getOption("spark.graft.lsh.bucketJoin")
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_LSH_JOIN", "shuffle_hash"))
     match {
+      case "shuffle_hash" => df.hint("shuffle_hash")
       case "auto" => df
       case "broadcast" => broadcast(df)
-      case _ => df.hint("shuffle_hash")
+      case other => throw new IllegalArgumentException(
+        s"spark.graft.lsh.bucketJoin (or SPARK_GRAFT_LSH_JOIN): unknown value " +
+          s"'$other'; expected shuffle_hash, auto or broadcast")
     }
 
   def lshCosinePairs(

@@ -170,102 +170,102 @@ object Dictionaries {
   }
 
   /** Register the SQL-name surface on the session. */
-  def install(spark: SparkSession): Unit = {
+  def register(r: graft.functions.FunctionSurface.Registrar): Unit = {
     // integer family: all map through Long (the reference's widths are a
     // storage detail; Spark's BIGINT covers every UInt8..Int64 value the
     // maps can hold)
     val intNames = Seq("UInt8", "UInt16", "UInt32", "UInt64",
       "Int8", "Int16", "Int32", "Int64")
     for (t <- intNames) {
-      spark.udf.register(s"dictGet$t",
+      r.udf(s"dictGet$t", udf(
         (d: String, a: String, k: Long) =>
-          rawGet(d, a, k).map(toLong).getOrElse(0L))
-      spark.udf.register(s"dictGet${t}OrDefault",
+          rawGet(d, a, k).map(toLong).getOrElse(0L)))
+      r.udf(s"dictGet${t}OrDefault", udf(
         (d: String, a: String, k: Long, dflt: Long) =>
-          rawGet(d, a, k).map(toLong).getOrElse(dflt))
+          rawGet(d, a, k).map(toLong).getOrElse(dflt)))
     }
     for (t <- Seq("Float32", "Float64")) {
-      spark.udf.register(s"dictGet$t",
+      r.udf(s"dictGet$t", udf(
         (d: String, a: String, k: Long) =>
-          rawGet(d, a, k).map(toDouble).getOrElse(0.0))
-      spark.udf.register(s"dictGet${t}OrDefault",
+          rawGet(d, a, k).map(toDouble).getOrElse(0.0)))
+      r.udf(s"dictGet${t}OrDefault", udf(
         (d: String, a: String, k: Long, dflt: Double) =>
-          rawGet(d, a, k).map(toDouble).getOrElse(dflt))
+          rawGet(d, a, k).map(toDouble).getOrElse(dflt)))
     }
     for (t <- Seq("String", "UUID", "IPv4", "IPv6")) {
-      spark.udf.register(s"dictGet$t",
+      r.udf(s"dictGet$t", udf(
         (d: String, a: String, k: Long) =>
-          rawGet(d, a, k).map(toStr).getOrElse(""))
-      spark.udf.register(s"dictGet${t}OrDefault",
+          rawGet(d, a, k).map(toStr).getOrElse("")))
+      r.udf(s"dictGet${t}OrDefault", udf(
         (d: String, a: String, k: Long, dflt: String) =>
-          rawGet(d, a, k).map(toStr).getOrElse(dflt))
+          rawGet(d, a, k).map(toStr).getOrElse(dflt)))
     }
-    spark.udf.register("dictGetDate",
+    r.udf("dictGetDate", udf(
       (d: String, a: String, k: Long) =>
         rawGet(d, a, k).map {
           case dd: java.sql.Date => dd
           case n: Number => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(n.longValue()))
           case s => java.sql.Date.valueOf(s.toString)
-        }.getOrElse(java.sql.Date.valueOf("1970-01-01")))
-    spark.udf.register("dictGetDateOrDefault",
+        }.getOrElse(java.sql.Date.valueOf("1970-01-01"))))
+    r.udf("dictGetDateOrDefault", udf(
       (d: String, a: String, k: Long, dflt: java.sql.Date) =>
         rawGet(d, a, k).map {
           case dd: java.sql.Date => dd
           case n: Number => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(n.longValue()))
           case s => java.sql.Date.valueOf(s.toString)
-        }.getOrElse(dflt))
-    spark.udf.register("dictGetDateTime",
+        }.getOrElse(dflt)))
+    r.udf("dictGetDateTime", udf(
       (d: String, a: String, k: Long) =>
         rawGet(d, a, k).map {
           case t: java.sql.Timestamp => t
           case n: Number => java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(n.longValue()))
           case s => java.sql.Timestamp.valueOf(s.toString)
-        }.getOrElse(new java.sql.Timestamp(0L)))
-    spark.udf.register("dictGetDateTimeOrDefault",
+        }.getOrElse(new java.sql.Timestamp(0L))))
+    r.udf("dictGetDateTimeOrDefault", udf(
       (d: String, a: String, k: Long, dflt: java.sql.Timestamp) =>
         rawGet(d, a, k).map {
           case t: java.sql.Timestamp => t
           case n: Number => java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(n.longValue()))
           case s => java.sql.Timestamp.valueOf(s.toString)
-        }.getOrElse(dflt))
+        }.getOrElse(dflt)))
     // untyped front: display form (the reference's untyped dictGet takes
     // its type from the dictionary DDL at analysis time; a SQL UDF has a
     // fixed return type, so the untyped name yields the string form and
     // the typed names carry exact types — documented deviation)
-    spark.udf.register("dictGet",
-      (d: String, a: String, k: Long) => rawGet(d, a, k).map(toStr).orNull)
-    spark.udf.register("dictGetOrNull",
-      (d: String, a: String, k: Long) => rawGet(d, a, k).map(toStr).orNull)
-    spark.udf.register("dictGetOrDefault",
+    r.udf("dictGet", udf(
+      (d: String, a: String, k: Long) => rawGet(d, a, k).map(toStr).orNull))
+    r.udf("dictGetOrNull", udf(
+      (d: String, a: String, k: Long) => rawGet(d, a, k).map(toStr).orNull))
+    r.udf("dictGetOrDefault", udf(
       (d: String, a: String, k: Long, dflt: String) =>
-        rawGet(d, a, k).map(toStr).getOrElse(dflt))
-    spark.udf.register("dictHas",
+        rawGet(d, a, k).map(toStr).getOrElse(dflt)))
+    r.udf("dictHas", udf(
       (d: String, k: Long) => {
         val dd = dict(d)
         val anyAttr = dd.attrs.values.headOption
         if (anyAttr.exists(_.contains(k))) 1 else 0
-      })
-    spark.udf.register("dictGetHierarchy", (d: String, k: Long) => hierarchy(d, k))
-    spark.udf.register("dictIsIn",
-      (d: String, c: Long, a: Long) => if (isIn(d, c, a)) 1 else 0)
-    spark.udf.register("dictGetChildren", (d: String, k: Long) => children(d, k))
-    spark.udf.register("dictGetDescendants",
-      (d: String, k: Long, lvl: Int) => descendants(d, k, lvl))
+      }))
+    r.udf("dictGetHierarchy", udf((d: String, k: Long) => hierarchy(d, k)))
+    r.udf("dictIsIn", udf(
+      (d: String, c: Long, a: Long) => if (isIn(d, c, a)) 1 else 0))
+    r.udf("dictGetChildren", udf((d: String, k: Long) => children(d, k)))
+    r.udf("dictGetDescendants", udf(
+      (d: String, k: Long, lvl: Int) => descendants(d, k, lvl)))
     // polygon-dictionary fronts (the reference overloads dictGet on a
     // tuple key at analysis time; Spark UDF names are monomorphic, so the
     // point-keyed lookups carry their own names — documented deviation)
-    spark.udf.register("dictGetPoint",
+    r.udf("dictGetPoint", udf(
       (d: String, a: String, x: Double, y: Double) =>
-        polyGet(d, a, x, y).map(toStr).orNull)
-    spark.udf.register("dictGetPointOrDefault",
+        polyGet(d, a, x, y).map(toStr).orNull))
+    r.udf("dictGetPointOrDefault", udf(
       (d: String, a: String, x: Double, y: Double, dflt: String) =>
-        polyGet(d, a, x, y).map(toStr).getOrElse(dflt))
-    spark.udf.register("dictGetPointUInt64OrDefault",
+        polyGet(d, a, x, y).map(toStr).getOrElse(dflt)))
+    r.udf("dictGetPointUInt64OrDefault", udf(
       (d: String, a: String, x: Double, y: Double, dflt: Long) =>
-        polyGet(d, a, x, y).map(toLong).getOrElse(dflt))
-    spark.udf.register("dictHasPoint",
+        polyGet(d, a, x, y).map(toLong).getOrElse(dflt)))
+    r.udf("dictHasPoint", udf(
       (d: String, x: Double, y: Double) =>
-        if (polyFind(d, x, y).isDefined) 1 else 0)
+        if (polyFind(d, x, y).isDefined) 1 else 0))
   }
 
   // ---- polygon dictionaries ----------------------------------------------

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The `ENGINE = Join` / `ENGINE = Set` storage analogs (ref
@@ -116,18 +116,18 @@ object JoinSetStorage {
     * resolves the column type at analysis time, a SQL UDF cannot), and
     * `inSet(name, x)` as the `x IN set_table` predicate.
     */
-  def install(spark: SparkSession): Unit = {
+  def register(r: graft.functions.FunctionSurface.Registrar): Unit = {
     def toStr(v: Any): String = v match {
       case b: Array[Byte] => new String(b, "UTF-8")
       case other => String.valueOf(other)
     }
-    spark.udf.register("joinGet", (t: String, a: String, k: Long) =>
-      toStr(joinGetRaw(t, a, k).getOrElse(typeDefault(t, a))))
-    spark.udf.register("joinGetOrNull", (t: String, a: String, k: Long) =>
-      joinGetRaw(t, a, k).map(toStr).orNull)
-    spark.udf.register("joinGetString", (t: String, a: String, k: String) =>
-      toStr(joinGetRaw(t, a, k).getOrElse(typeDefault(t, a))))
-    spark.udf.register("inSet", (n: String, v: Long) => inSetValue(n, v))
-    spark.udf.register("inSetString", (n: String, v: String) => inSetValue(n, v))
+    r.udf("joinGet", udf((t: String, a: String, k: Long) =>
+      toStr(joinGetRaw(t, a, k).getOrElse(typeDefault(t, a)))))
+    r.udf("joinGetOrNull", udf((t: String, a: String, k: Long) =>
+      joinGetRaw(t, a, k).map(toStr).orNull))
+    r.udf("joinGetString", udf((t: String, a: String, k: String) =>
+      toStr(joinGetRaw(t, a, k).getOrElse(typeDefault(t, a)))))
+    r.udf("inSet", udf((n: String, v: Long) => inSetValue(n, v)))
+    r.udf("inSetString", udf((n: String, v: String) => inSetValue(n, v)))
   }
 }

@@ -1394,8 +1394,8 @@ object RelationalQueries {
     // (HashParity/ChHash) evaluated through SQL; the DuckDB oracle is
     // the reference's OWN expected outputs (00678_murmurhash,
     // 00746_hashing_tuples, 00751_hashing_ints, 00803_xxhash .reference
-    // files) as signed-BIGINT literals. ClickHouseCompat.install runs in
-    // the Verify session, so the names resolve.
+    // files) as signed-BIGINT literals. The Verify session carries the
+    // whole function surface, so the names resolve.
     "q58_hash_parity" -> ((s, dir) => {
       s.range(1).selectExpr(
         "cityHash64(123456) AS city_int",

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Time one named SparkEntry query: `runMain graft.tools.QueryTime
   * <name> [sfDir] [reps]`. Useful when iterating on a single operator —
@@ -11,20 +10,7 @@ object QueryTime {
     val name = args.headOption.getOrElse(sys.error("usage: QueryTime <name> [sfDir] [reps]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // engineConfs: match Bench's session posture exactly — an A/B timed
-    // here must execute the plans the bench times
-    val spark = graft.engine.GraftSession.withEngineConfs(
-      SparkSession.builder()
-      .withExtensions(new graft.engine.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.GraftSession.install(spark)
+    val spark = graft.engine.GraftSession.create() // Bench's posture
     // comma-separated names run in sequence in ONE JVM — put a cheap
     // query first to absorb session/codegen warmup when timing another
     name.split(',').foreach { nm =>

@@ -22,6 +22,18 @@ object shim {
   def expressionEager(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** Function-registry builder for a `functions.udf`/`udaf` value — the
+    * builder `spark.udf.register` installs (`toScalaUDF` and
+    * `ScalaAggregator` are `private[sql]`), usable without a session.
+    */
+  def udfBuilder(name: String, f: org.apache.spark.sql.expressions.UserDefinedFunction)
+      : Seq[Expression] => Expression = f.withName(name) match {
+    case a: org.apache.spark.sql.expressions.UserDefinedAggregator[_, _, _] =>
+      cs => org.apache.spark.sql.execution.aggregate.ScalaAggregator(a, cs)
+    case u: org.apache.spark.sql.expressions.SparkUserDefinedFunction =>
+      cs => org.apache.spark.sql.classic.UserDefinedFunctionUtils.toScalaUDF(u, cs)
+  }
+
   /** DataFrame over a raw logical plan (`Dataset.ofRows` is
     * `private[sql]`) — used by optimizer rules that graft an index-scan
     * sub-plan into an existing query tree.

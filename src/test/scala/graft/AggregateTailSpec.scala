@@ -144,7 +144,6 @@ class AggregateTailSpec extends SparkSpec {
   // ---- SQL-name registry fronts ----
 
   test("registry fronts resolve: skew/kurt, exact-quantile tail, sweeps") {
-    graft.functions.GraftFunctions.registerAll(spark)
     val r = Seq(1.0, 2.0, 2.0, 3.0, 7.0).toDF("x")
       .selectExpr(
         "skewSamp(x) AS ss", "kurtPop(x) AS kp",
@@ -174,7 +173,6 @@ class AggregateTailSpec extends SparkSpec {
   }
 
   test("plural quantiles* fronts: per-level arrays, ordered as given") {
-    graft.functions.GraftFunctions.registerAll(spark)
     val r = (1 to 10).map(_.toDouble).toDF("x")
       .selectExpr(
         "quantile(x, 0.5D) AS q",

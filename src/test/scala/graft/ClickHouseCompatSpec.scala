@@ -1,14 +1,51 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkSqlParser
+import org.apache.spark.sql.execution.command.CreateSQLFunctionCommand
+
 class ClickHouseCompatSpec extends SparkSpec {
 
-  test("all definitions install cleanly") {
-    val failed = graft.functions.ClickHouseCompat.install(spark)
-    assert(failed.isEmpty, s"failed to install: $failed")
+  // The body check CREATE TEMPORARY FUNCTION performed: every SQL-bodied
+  // definition analyzes when applied to typed NULLs of its parameters.
+  test("every SQL-bodied function analyzes on typed NULL arguments") {
+    val parser = new SparkSqlParser()
+    val calls = graft.functions.ClickHouseCompat.definitions.map { d =>
+      val cmd = parser.parsePlan(s"CREATE TEMPORARY FUNCTION $d")
+        .asInstanceOf[CreateSQLFunctionCommand]
+      val args = cmd.inputParamText.map(parser.parseTableSchema).toSeq
+        .flatMap(_.fields).map(f => s"CAST(NULL AS ${f.dataType.sql})")
+      s"${cmd.name.funcName}(${args.mkString(", ")})"
+    }
+    val failed = calls.flatMap { c =>
+      try { spark.sql(s"SELECT $c"); None }
+      catch { case e: Exception => Some(s"$c: ${e.getMessage.take(300)}") }
+    }
+    assert(calls.size > 600)
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test("building the function surface fails loudly") {
+    import graft.functions.FunctionSurface
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+      FunctionSurface.build(_.sql("broken(x INT) RETURNS INT RETURN x +")))
+    val e = intercept[IllegalArgumentException](FunctionSurface.build { r =>
+      r.sql("twice(x INT) RETURNS INT RETURN x")
+      r.expr("Twice")(_.head)
+    })
+    assert(e.getMessage.contains("twice"))
+  }
+
+  test("a fresh newSession() resolves the function surface with no install") {
+    val s = spark.newSession()
+    val df = s.sql("SELECT toYear(TIMESTAMP '2024-05-01 00:00:00') AS y, " +
+      "stem('en', 'running') AS st, dictGetString('no_dict', 'a', 1L) AS dg, " +
+      "mapApply((k, v) -> (k, v * 2), map(1, 2)) AS ma, " +
+      "getObject('no_conn', CAST(NULL AS STRING)) AS go")
+    assert(df.queryExecution.analyzed.resolved)
+    assert(df.select("y", "st").head() === org.apache.spark.sql.Row(2024, "run"))
   }
 
   test("date/time aliases") {
-    spark // install happens in TestSpark via GraftSession.install
     def q1(sql: String): Any = spark.sql(s"SELECT $sql").head().get(0)
     assert(q1("toYYYYMM(TIMESTAMP '1997-03-15 10:20:30')") === 199703)
     assert(q1("toYYYYMMDD(TIMESTAMP '1997-03-15 10:20:30')") === 19970315)

@@ -257,6 +257,16 @@ class OperatorsSpec extends SparkSpec {
     assert(recall >= 0.9, s"LSH recall $recall over ${exact.size} exact pairs")
   }
 
+  test("lshCosinePairs rejects an unknown bucket-join strategy") {
+    val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")
+    spark.conf.set("spark.graft.lsh.bucketJoin", "shuffle-hash")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Dedup.lshCosinePairs(emb, col("embedding"), col("vec_id"), 0.35, 4, 16))
+      assert(e.getMessage.contains("'shuffle-hash'"))
+    } finally spark.conf.unset("spark.graft.lsh.bucketJoin")
+  }
+
   test("LSH-fed connected components ≈ exact-fed clusters (d10 path)") {
     val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")
     def clusters(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =

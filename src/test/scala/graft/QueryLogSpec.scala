@@ -8,7 +8,6 @@ class QueryLogSpec extends SparkSpec {
   import spark.implicits._
 
   test("query_log records finished actions with durations") {
-    QueryLog.install(spark) // idempotent (already installed by TestSpark)
     QueryLog.clear()
     Seq(1, 2, 3).toDF("x").filter($"x" > 1).count()
     spark.range(10).collect()
